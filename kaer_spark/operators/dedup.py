@@ -5,7 +5,11 @@ None of these exist in the reference (SURVEY.md §2.3); they are the
 north-star extensions, built entirely from Catalyst-native expressions so
 every variant is reproducible by a SQL oracle (the hash functions are plain
 int64 polynomial arithmetic, not JVM murmur/xxhash, precisely so DuckDB can
-replay them bit-for-bit).
+replay them bit-for-bit). One exception: the n-gram Jaccard/containment
+inverted index joins shingles on their ``xxhash64`` (an identity key, never
+a reported value). Two distinct shingles that collide would merge their
+postings, so exact replay there holds unless a 64-bit collision occurs
+(probability ~n²/2⁶⁵ for n distinct shingles; none at sf0.001–0.1).
 
 Scale design (100 TB):
 
@@ -921,9 +925,11 @@ def ngram_jaccard_between(
     """CROSS-corpus exact n-gram Jaccard pairs ``(left_id, right_id,
     jaccard)`` — the deterministic decontamination screen next to the
     probabilistic :func:`minhash_near_dups_between` (same contract, no
-    hashing approximation: Jaccard is computed from true distinct-
-    shingle intersection counts, so the screen is exactly replayable by
-    a SQL oracle). ``max_doc_freq`` caps on the RIGHT (reference)
+    sketching approximation: Jaccard is computed from distinct-shingle
+    intersection counts, so the screen is replayable by a SQL oracle).
+    The counts join shingles on 64-bit ``xxhash64`` keys, so they are
+    exact unless two distinct shingles collide (probability ~n²/2⁶⁵ for
+    n distinct shingles; none at sf0.001–0.1). ``max_doc_freq`` caps on the RIGHT (reference)
     corpus's doc frequencies — see :func:`_between_pair_counts`. The
     recurring regime serves the same values from a standing reference
     artifact via :func:`ngram_jaccard_against_index`."""
@@ -1595,7 +1601,7 @@ def minhash_signatures(
     The char-unit hot path (r11) never materializes shingle STRINGS for
     the signature: window fingerprints evaluate as flat power-basis sums
     over a once-per-row codepoint array (the passage-family trick,
-    ``_win_fp``-style), and each slot takes ``array_min`` over the
+    ``_horner_flat_sql``), and each slot takes ``array_min`` over the
     fingerprint array with duplicates intact — ``min`` over a multiset
     equals ``min`` over its distinct set, so the signature is provably
     identical to the distinct-shingle definition (verified value-equal at
@@ -1606,23 +1612,37 @@ def minhash_signatures(
     coeffs = minhash_coeffs(num_hashes, seed)
     if unit == "char":
         N = int(n)
-        # [r18] the whole char-path signature — window hashes, distinct,
-        # per-slot (f·a+b) mod P minima — is vectorized in one Arrow
-        # batch per partition chunk (functions.fphash, guide §4.2): the
-        # expression form was an interpreted higher-order transform per
-        # window plus 16 interpreted per-slot array_min transforms.
-        # Bit-identical (stepwise-mod == total-mod residue, int64
-        # overflow-free; pinned by test against the expression twin and
-        # oracle-checked on every riding query).
-        from kaer_spark.functions.fphash import minhash_sig_col
-
-        # (History: r17 measured a JVM-expression slot-collapse 2-3×
-        # SLOWER than per-slot array_min subtrees and reverted it — that
-        # measurement was about two EXPRESSION forms; the Arrow/numpy
-        # path replaces the whole interpreted family, not the tree
-        # shape, and was A/B-measured against the surviving form.)
-        base = ensure_parallelism(df.filter(F.length(text_col) >= N))
-        sig = minhash_sig_col(text_col, N, coeffs, HASH_BASE, HASH_MOD)
+        fps_all = F.array_distinct(
+            _window_transform(
+                "__mh_codes",
+                N,
+                _horner_flat_sql("__mh_codes", "i", N, HASH_BASE, HASH_MOD),
+            )
+        )
+        base = (
+            ensure_parallelism(df.filter(F.length(text_col) >= N))
+            .withColumn("__mh_codes", _codes_col(text_col))
+            .withColumn("__mh_fps", fps_all)
+        )
+        # Per-slot array_min subtrees, deliberately: an attempt to
+        # collapse the slots into ONE transform over a literal (a, b)
+        # struct table (smaller tree, cheaper planning) measured 2-3×
+        # SLOWER at runtime in an interleaved same-session A/B at the
+        # declared geometry (num_hashes=16, sf0.1: noop-sink mins 0.52s
+        # per-slot vs 1.39s collapsed) — the literal coefficients fold
+        # into each slot's lambda here, while the collapsed form pays
+        # struct-field extraction per element per slot. The slots are
+        # emitted as ONE parsed expression TEXT (sameSemantics-identical
+        # to the per-slot builder, so runtime is untouched) because the
+        # per-slot builder spent ~0.45s of py4j round-trips per
+        # signature frame on construction alone.
+        sig = cached_expr(
+            "array(" + ",".join(
+                f"array_min(transform(__mh_fps, "
+                f"f -> (f * {int(a)} + {int(b)}) % {int(HASH_MOD)}))"
+                for a, b in coeffs
+            ) + ")"
+        )
         return base.select(
             F.col(id_col).alias("id"),
             _shingle_expr(text_col, n, unit).alias("shingles"),
@@ -3741,26 +3761,15 @@ def duplicate_passages(
     if length <= 0:
         raise ValueError("length must be positive")
     L = int(length)
-    # [r18] vectorized window hashing (functions.fphash — guide §4.2):
-    # the expression form is an interpreted higher-order transform
-    # (~70 tree nodes per window per modulus); the Arrow/numpy twin is
-    # bit-identical (pinned by test) and evaluates whole batches.
-    from kaer_spark.functions.fphash import window_fps_col
-
+    win = _win_fps_transform(L)
     # ensure_parallelism: the fixture-scale single-file scan would
     # otherwise run the whole O(chars × length) hash in ONE task (measured
     # 63s -> ~3s at sf0.1); at real scale the input has partitions and
     # this is a no-op
     exploded = (
         ensure_parallelism(df.filter(F.length(text_col) >= L))
-        .select(
-            F.col(id_col).alias("id"),
-            F.explode(
-                window_fps_col(
-                    text_col, L, HASH_BASE, HASH_MOD, HASH_BASE2, HASH_MOD2
-                )
-            ).alias("fp"),
-        )
+        .withColumn("__codes", _codes_col(text_col))
+        .select(F.col(id_col).alias("id"), F.explode(win).alias("fp"))
     )
     # two-level aggregation instead of groupBy(fp).agg(countDistinct(id),
     # count, min): mixing a distinct agg with plain aggs makes Catalyst
@@ -3780,57 +3789,31 @@ def duplicate_passages(
     )
 
 
-
-def _win_fp(codes_col: str, i: Column, length: int) -> Column:
-    """Widened window fingerprint at 1-based start ``i`` over the
-    materialized codepoint array column ``codes_col``: two independent
-    polynomial hashes (base 31 mod 1e9+7 / base 131 mod 1e9+9) packed as
-    ``h1 * MOD2 + h2`` — a ~60-bit int64 a SQL oracle replays with the
-    identical bigint arithmetic.
-
-    Evaluated as the FLAT power-basis sum ``Σ c_{i+k} · Bᴸ⁻¹⁻ᵏ mod P``
-    with precomputed power literals — mathematically identical to the
-    Horner fold (same value mod P, verified row-for-row), but with no
-    per-window array slice and no inner ``aggregate``: the r10 fold shape
-    allocated a 24-element slice and ran an interpreted two-field fold
-    per window, which measured 15× slower at sf0.1 (16s vs 1.1s explode)
-    than this expression. Every intermediate stays < 2^52 even at the
-    full unicode range (c < 2^21, powers < 2^30)."""
-    L = int(length)
-    pw1 = [pow(HASH_BASE, L - 1 - k, HASH_MOD) for k in range(L)]
-    pw2 = [pow(HASH_BASE2, L - 1 - k, HASH_MOD2) for k in range(L)]
-    h1 = F.lit(0).cast("long")
-    h2 = F.lit(0).cast("long")
-    for k in range(L):
-        c = F.element_at(codes_col, i + F.lit(k))
-        h1 = (h1 + c * F.lit(pw1[k])) % F.lit(HASH_MOD)
-        h2 = (h2 + c * F.lit(pw2[k])) % F.lit(HASH_MOD2)
-    return h1 * F.lit(HASH_MOD2) + h2
-
-
 def _codes_col(text_col: str) -> Column:
     """Codepoint array of the text — materialize once per row (a named
     column, not an inline expression) so the ``element_at`` probes of
-    ``_win_fp`` never re-split the string."""
+    the window hashes never re-split the string."""
     return F.transform(
         F.split(F.col(text_col), ""), lambda ch: F.ascii(ch).cast("long")
     )
 
 
-_WINFP_IDENT = __import__("re").compile(r"[A-Za-z_][A-Za-z0-9_]*\Z")
-
-
 def _horner_flat_sql(
     codes_col: str, ivar: str, length: int, base: int, mod: int
 ) -> str:
-    """SQL text of one flat power-basis hash chain — the EXACT tree the
-    ``_win_fp`` builder produces for that modulus (same nesting, same
-    int literal types), emitted as text so the whole window transform
-    parses in ONE ``F.expr`` round-trip instead of ``length × ~16``
-    py4j gateway calls per call site (the r17 ``functions/vector.py``
-    literal-fold pattern applied to the window-fingerprint family:
-    cProfile put ~2.3s of ``cdc_stats``'s construction in these
-    round-trips)."""
+    """SQL text of one window hash at 1-based start ``ivar`` over the
+    codepoint array column ``codes_col``: the FLAT power-basis sum
+    ``Σ c_{i+k} · Bᴸ⁻¹⁻ᵏ mod P`` with precomputed power literals.
+
+    Mathematically identical to the Horner fold (same value mod P), but
+    with no per-window array slice and no inner ``aggregate``: the r10
+    fold shape allocated a slice and ran an interpreted two-field fold
+    per window, which measured 15× slower at sf0.1 (16s vs 1.1s
+    explode). Every intermediate stays < 2^52 even at the full unicode
+    range (c < 2^21, powers < 2^30). Emitted as text so a whole window
+    transform parses in ONE ``F.expr`` round-trip instead of
+    ``length × ~16`` py4j gateway calls (cProfile put ~2.3s of
+    ``cdc_stats``'s construction in those round-trips)."""
     L = int(length)
     h = "CAST(0 AS BIGINT)"
     for k in range(L):
@@ -3843,28 +3826,34 @@ def _horner_flat_sql(
 
 
 def _win_fp_sql(codes_col: str, ivar: str, length: int) -> str:
-    """SQL text of ``_win_fp`` at lambda variable ``ivar`` — paired
-    moduli packed as ``h1 * MOD2 + h2``, identical tree."""
+    """SQL text of the widened window fingerprint: two independent
+    polynomial hashes (base 31 mod 1e9+7 / base 131 mod 1e9+9) packed as
+    ``h1 * MOD2 + h2`` — a ~60-bit int64 a SQL oracle replays with the
+    identical bigint arithmetic."""
     h1 = _horner_flat_sql(codes_col, ivar, length, HASH_BASE, HASH_MOD)
     h2 = _horner_flat_sql(codes_col, ivar, length, HASH_BASE2, HASH_MOD2)
     return f"({h1} * {HASH_MOD2} + {h2})"
 
 
-def _win_fps_transform(text_col: str, length: int) -> Column:
-    """The bare window-fingerprint transform
-    ``transform(sequence(1, length(text) - L + 1), i -> <fp>)`` as ONE
-    parsed expression when ``text_col`` is a plain identifier (every
-    driver query; the builder fallback keeps exotic column names
-    working)."""
-    L = int(length)
-    if _WINFP_IDENT.match(text_col):
-        return cached_expr(
-            f"transform(sequence(1, length({text_col}) - {L} + 1), "
-            f"i -> {_win_fp_sql('__codes', 'i', L)})"
-        )
-    return F.transform(
-        F.sequence(F.lit(1), F.length(text_col) - L + 1),
-        lambda i: _win_fp("__codes", i, L),
+def _window_transform(codes_col: str, length: int, body: str) -> Column:
+    """``transform(sequence(1, size(codes) - L + 1), i -> body)`` — one
+    element per ``length``-char window, ``body`` being SQL text in the
+    1-based window start ``i`` — parsed once (``cached_expr``).
+
+    The text names only the internal codepoint column: ``size`` of the
+    codepoint array is the text's character count for every non-empty
+    string (callers never evaluate it on a text shorter than one
+    window), so any user text column name works without quoting."""
+    return cached_expr(
+        f"transform(sequence(1, size({codes_col}) - {int(length)} + 1), "
+        f"i -> {body})"
+    )
+
+
+def _win_fps_transform(length: int) -> Column:
+    """The bare window-fingerprint array over ``__codes``."""
+    return _window_transform(
+        "__codes", length, _win_fp_sql("__codes", "i", length)
     )
 
 
@@ -3875,23 +3864,14 @@ def _window_fp_explode(
     front end of the passage-dedup family (report, removal, cross-corpus
     overlap): the codepoint array materializes once per row, each
     ``length``-char window hashes by the flat paired-moduli sum
-    (``_win_fp``, ~60 collision bits), one narrow posexplode carries the
-    0-based start position."""
+    (``_win_fp_sql``, ~60 collision bits), one narrow posexplode carries
+    the 0-based start position."""
     L = int(length)
-    # [r18] vectorized window hashing (functions.fphash — guide §4.2,
-    # bit-identical twin of _win_fps_transform, pinned by test)
-    from kaer_spark.functions.fphash import window_fps_col
-
+    win = _win_fps_transform(L)
     return (
         ensure_parallelism(df.filter(F.length(text_col) >= L))
-        .select(
-            F.col(id_col).alias("id"),
-            F.posexplode(
-                window_fps_col(
-                    text_col, L, HASH_BASE, HASH_MOD, HASH_BASE2, HASH_MOD2
-                )
-            ).alias("pos0", "fp"),
-        )
+        .withColumn("__codes", _codes_col(text_col))
+        .select(F.col(id_col).alias("id"), F.posexplode(win).alias("pos0", "fp"))
     )
 
 
@@ -4140,35 +4120,33 @@ def winnow_fingerprints(
     if k < 1 or window < 1:
         raise ValueError("k and window must be positive")
     K, w = int(k), int(window)
-    # [r18] hash + winnowing selection vectorized in one Arrow batch
-    # per partition chunk (functions.fphash — guide §4.2): the r17
-    # expression form (interpreted per-window Horner trees + a
-    # per-window array_min over struct slices, plus the checkpoint
-    # needed to stop CollapseProject inlining the hash array into every
-    # slice) profiled at ~20s executor CPU + ~30s allocation stall for
-    # 1.5 MB of text. The numpy twin is bit-identical — same paired
-    # moduli, same MOSS rightmost-tie rule, same truncated-window
-    # convention — pinned by test and oracle-checked on every winnow
-    # query. No checkpoint needed: the UDF output is a single struct of
-    # parallel (pos0, fp) arrays, exploded once.
-    from kaer_spark.functions.fphash import winnow_selections_col
-
-    sel = winnow_selections_col(
-        text_col, K, w, HASH_BASE, HASH_MOD, HASH_BASE2, HASH_MOD2
+    hstructs = _window_transform(
+        "__codes",
+        K,
+        f"named_struct('h', {_win_fp_sql('__codes', 'i', K)}, 'np', -i)",
+    )
+    sel = F.transform(
+        F.sequence(F.lit(1), F.greatest(F.size("__h") - w + 1, F.lit(1))),
+        lambda j: F.array_min(F.slice("__h", j, w)),
+    )
+    # the checkpoint is a PLAN BARRIER, not just lineage hygiene: the
+    # selection transform references __h exactly once, so CollapseProject
+    # would inline the whole hash-array expression into every per-window
+    # slice — O(n_hashes² · k) per document, measured 20× slower at
+    # sf0.01. Materializing (id, __h) pins one-hash-evaluation-per-window
+    # the way the passage family's multi-reference __codes pattern does.
+    hashed = (
+        ensure_parallelism(df.filter(F.length(text_col) >= K))
+        .withColumn("__codes", _codes_col(text_col))
+        .select(F.col(id_col).alias("id"), hstructs.alias("__h"))
+        .localCheckpoint(eager=False)
     )
     return (
-        ensure_parallelism(df.filter(F.length(text_col) >= K))
-        .select(F.col(id_col).alias("id"), sel.alias("__s"))
+        hashed.select("id", F.explode(sel).alias("s"))
         .select(
             "id",
-            F.explode(F.arrays_zip(F.col("__s.p"), F.col("__s.f"))).alias(
-                "__e"
-            ),
-        )
-        .select(
-            "id",
-            F.col("__e.p").cast("long").alias("pos0"),
-            F.col("__e.f").alias("fp"),
+            (-F.col("s.np") - 1).cast("long").alias("pos0"),
+            F.col("s.h").alias("fp"),
         )
         .distinct()
     )
@@ -4854,7 +4832,7 @@ def cdc_chunks(
 
     Conventions (identical on the oracle side): windows are the same
     paired-moduli ~60-bit fingerprints as the passage/winnowing family
-    (``_win_fp``); cut offsets are window-end positions (0-based
+    (``_win_fp_sql``); cut offsets are window-end positions (0-based
     ``i + w − 1`` for 1-based window start ``i``); 0 and ``len(text)``
     are always boundaries; documents shorter than ``w`` are one chunk;
     empty documents contribute nothing. ``chunk_fp`` is the paired
@@ -4871,21 +4849,11 @@ def cdc_chunks(
     if W < 2 or D < 2:
         raise ValueError("w and divisor must be >= 2")
     n_h = F.length(text_col) - W + 1
-    # parsed-in-one-call transform (see _horner_flat_sql) with the
-    # builder fallback for exotic column names
-    if _WINFP_IDENT.match(text_col):
-        tf = cached_expr(
-            f"transform(sequence(1, length({text_col}) - {W} + 1), "
-            f"i -> named_struct("
-            f"'h', {_win_fp_sql('__codes', 'i', W)}, 'i', i))"
-        )
-    else:
-        tf = F.transform(
-            F.sequence(F.lit(1), n_h),
-            lambda i: F.struct(
-                _win_fp("__codes", i, W).alias("h"), i.alias("i")
-            ),
-        )
+    tf = _window_transform(
+        "__codes",
+        W,
+        f"named_struct('h', {_win_fp_sql('__codes', 'i', W)}, 'i', i)",
+    )
     hstructs = F.when(n_h >= 1, tf).otherwise(
         F.expr("CAST(array() AS array<struct<h:bigint,i:int>>)")
     )

@@ -147,7 +147,7 @@ _SLOW_TESTS = frozenset({
     "test_dedup.py::test_ngram_jaccard_between_matches_bruteforce",
     "test_dedup.py::test_ngram_jaccard_bucketed_table_no_postings_shuffle",
     "test_dedup.py::test_ngram_jaccard_indexed_equals_fresh",
-    "test_dedup.py::test_parsed_window_fp_trees_match_builders",
+    "test_dedup.py::test_parsed_band_keys_match_builder",
     "test_dedup.py::test_passage_overlap_between_and_removal_against",
     "test_dedup.py::test_passage_verify_rejects_fingerprint_collisions",
     "test_dedup.py::test_refresh_minhash_index_equals_rebuild",
@@ -320,8 +320,24 @@ _SLOW_TESTS = frozenset({
 def pytest_collection_modifyitems(config, items):
     """Attach the `slow` marker to the re-tiered tests before the
     builtin `-m` filter (pytest.ini deselects `slow` by default) runs —
-    conftest hooks execute ahead of the mark plugin's filter."""
+    conftest hooks execute ahead of the mark plugin's filter.
+
+    A `_SLOW_TESTS` entry whose file was collected but which names no
+    test function of that file is stale (the test was renamed or
+    deleted) and fails the run. Files that were not collected, as in a
+    subset run, are not checked."""
+    modules = {}
     for item in items:
         key = f"{item.fspath.basename}::{item.function.__name__}"
+        modules[item.fspath.basename] = item.module
         if key in _SLOW_TESTS:
             item.add_marker(pytest.mark.slow)
+    stale = []
+    for key in sorted(_SLOW_TESTS):
+        fname, _, func = key.partition("::")
+        if fname in modules and not callable(getattr(modules[fname], func, None)):
+            stale.append(key)
+    if stale:
+        raise pytest.UsageError(
+            "stale _SLOW_TESTS entries (no such test): " + ", ".join(stale)
+        )

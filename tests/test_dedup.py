@@ -8,6 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from kaer_spark.operators.dedup import (
+    HASH_BASE,
+    HASH_BASE2,
+    HASH_MOD,
+    HASH_MOD2,
     embedding_near_dups,
     exact_dedup,
     minhash_near_dups,
@@ -1079,21 +1083,28 @@ def test_ngram_containment_cap_shares_jaccard_semantics(spark):
 # ---------------------------------------------------------------------------
 # winnowing (r11): MOSS sampled fingerprints
 # ---------------------------------------------------------------------------
-def _py_winnow(text, k, w):
-    MOD1, B1, MOD2, B2 = 1_000_000_007, 31, 1_000_000_009, 131
-    if len(text) < k:
-        return set()
+def _py_poly_fps(text, L, base, mod):
+    """Python evaluation of one polynomial hash per ``L``-char window."""
     cs = [ord(c) for c in text]
-    n = len(text) - k + 1
-    hs = []
-    for i in range(n):
-        h1 = h2 = 0
-        for j in range(k):
-            h1 = (h1 + cs[i + j] * pow(B1, k - 1 - j, MOD1)) % MOD1
-            h2 = (h2 + cs[i + j] * pow(B2, k - 1 - j, MOD2)) % MOD2
-        hs.append(h1 * MOD2 + h2)
+    return [
+        sum(cs[i + k] * pow(base, L - 1 - k, mod) for k in range(L)) % mod
+        for i in range(len(cs) - L + 1)
+    ]
+
+
+def _py_win_fps(text, L):
+    """Python evaluation of the paired-moduli window fingerprints."""
+    h1 = _py_poly_fps(text, L, HASH_BASE, HASH_MOD)
+    h2 = _py_poly_fps(text, L, HASH_BASE2, HASH_MOD2)
+    return [a * HASH_MOD2 + b for a, b in zip(h1, h2)]
+
+
+def _py_winnow(text, k, w):
+    hs = _py_win_fps(text, k)
+    if not hs:
+        return set()
     sel = set()
-    for j in range(max(n - w + 1, 1)):
+    for j in range(max(len(hs) - w + 1, 1)):
         win = hs[j : j + w]
         m = min(win)
         # rightmost occurrence of the min
@@ -1362,6 +1373,116 @@ def test_cdc_stats_match_python(spark, cdc_fixture):
     assert got["total_chars"] == total
     assert got["distinct_chars"] == distinct
     assert got["dedup_ratio"] == 1.0 - distinct / total
+
+
+# --- window-fingerprint edge cases -----------------------------------------
+# Every window hash (passages, MinHash char signatures, winnowing, CDC)
+# is one parsed SQL-text expression over the codepoint array; these pin
+# its values against the Python definitions on empty, short, accented,
+# CJK, astral-plane and all-ties text, and under a text column name that
+# is not a plain SQL identifier.
+
+EDGE_TEXTS = [
+    "hello world, hello world, hello world",
+    "short",
+    "",
+    "exactly-16-chars",
+    "héllo wörld — unicode façade",
+    "日本語テキストの重複検出テスト日本語テキスト",
+    "emoji 😀🎉 astral 𝕏𝕐 pairs 😀🎉",
+    "aaaaaaaaaaaaaaaaaaaaaaaaaaaaaa",  # all hashes tie
+    "abcdefghijklmnop" * 8,
+]
+
+
+@pytest.fixture(params=["text", "body text"], ids=["plain", "spaced"])
+def edge_docs(spark, request):
+    """(DataFrame of EDGE_TEXTS, its text column name)."""
+    col = request.param
+    df = spark.createDataFrame(
+        list(enumerate(EDGE_TEXTS)),
+        f"doc_id long, `{col}` string",
+    )
+    return df, col
+
+
+def test_window_fp_explode_edge_texts(edge_docs):
+    from kaer_spark.operators.dedup import _window_fp_explode, duplicate_passages
+
+    df, col = edge_docs
+    L = 16
+    got = {}
+    for r in _window_fp_explode(df, "doc_id", col, L).collect():
+        got.setdefault(r["id"], []).append((r["pos0"], r["fp"]))
+    want = {
+        i: list(enumerate(_py_win_fps(t, L)))
+        for i, t in enumerate(EDGE_TEXTS)
+        if len(t) >= L
+    }
+    assert {i: sorted(v) for i, v in got.items()} == want
+
+    # the report explodes the same fingerprints without positions
+    n_docs = {}
+    for i, fps in want.items():
+        for _, fp in fps:
+            n_docs.setdefault(fp, set()).add(i)
+    rep = duplicate_passages(df, "doc_id", col, length=L, min_docs=1)
+    assert {r["fp"]: r["n_docs"] for r in rep.collect()} == {
+        fp: len(ids) for fp, ids in n_docs.items()
+    }
+
+
+def test_minhash_char_signatures_edge_texts(edge_docs):
+    from kaer_spark.operators.dedup import minhash_coeffs
+
+    df, col = edge_docs
+    N, coeffs = 8, minhash_coeffs(16, 42)
+    got = {
+        r["id"]: list(r["sig"])
+        for r in minhash_signatures(df, "doc_id", col, N, 16, 42, "char")
+        .select("id", "sig")
+        .collect()
+    }
+    want = {}
+    for i, t in enumerate(EDGE_TEXTS):
+        fps = set(_py_poly_fps(t, N, HASH_BASE, HASH_MOD))
+        if fps:
+            want[i] = [min((f * a + b) % HASH_MOD for f in fps) for a, b in coeffs]
+    assert got == want
+
+
+def test_winnow_edge_texts(edge_docs):
+    """Rightmost-tie rule (the all-ties text) and the truncated single
+    window (texts with fewer than ``window`` hashes)."""
+    from kaer_spark.operators.dedup import winnow_fingerprints
+
+    df, col = edge_docs
+    got = {}
+    for r in winnow_fingerprints(df, "doc_id", col, k=16, window=8).collect():
+        got.setdefault(r["id"], set()).add((r["pos0"], r["fp"]))
+    want = {
+        i: sel for i, t in enumerate(EDGE_TEXTS) if (sel := _py_winnow(t, 16, 8))
+    }
+    assert got == want
+    # all ties: each window keeps its LAST position (leftmost would be 0..7)
+    assert {p for p, _ in got[7]} == set(range(7, 15))
+
+
+def test_cdc_chunks_edge_texts(edge_docs):
+    from kaer_spark.operators.dedup import cdc_chunks
+
+    df, col = edge_docs
+    got = {}
+    for r in cdc_chunks(df, "doc_id", col, w=8, divisor=4).collect():
+        got.setdefault(r["id"], []).append(
+            (r["chunk_idx"], r["chunk_start"], r["chunk_len"], r["chunk_fp"])
+        )
+    want = {
+        i: [(j, *c) for j, c in enumerate(_py_cdc(t, 8, 4))]
+        for i, t in enumerate(EDGE_TEXTS)
+        if t
+    }
+    assert {i: sorted(v) for i, v in got.items()} == want
 
 
 def test_cluster_holdout_split_no_straddle(spark):
@@ -2568,78 +2689,19 @@ def test_winnow_index_family_contract(spark, tmp_path):
     assert st["n_fp_rows"] == sum(1 for _ in rows(path))
 
 
-def test_parsed_window_fp_trees_match_builders(spark, documents):
-    """The r17 parsed-SQL constructors (_win_fps_transform, the winnow/
-    cdc struct transforms, the minhash signature slots and band keys)
-    must stay expression-identical to the per-element builder forms they
-    replaced — same Catalyst tree, not merely same values (a drifted
-    parse would silently change what the oracle replays)."""
+def test_parsed_band_keys_match_builder(spark, documents):
+    """The parsed-SQL MinHash band keys must stay expression-identical to
+    the per-band struct builder they replaced — same Catalyst tree, not
+    merely same values (a drifted parse would silently change what the
+    oracle replays)."""
     from pyspark.sql import functions as F
 
     import kaer_spark.operators.dedup as D
 
     docs = documents.select("doc_id", "text").limit(50)
-    base = docs.withColumn("__codes", D._codes_col("text"))
-
-    def builder_win(L):
-        return F.transform(
-            F.sequence(F.lit(1), F.length("text") - L + 1),
-            lambda i: D._win_fp("__codes", i, L),
-        )
-
-    for L in (16, 24):
-        a = base.select("doc_id", D._win_fps_transform("text", L).alias("w"))
-        b = base.select("doc_id", builder_win(L).alias("w"))
-        assert a.sameSemantics(b), f"parsed _win_fps_transform drifted (L={L})"
-
-    # minhash signature slots: parsed text vs the per-slot builder
-    coeffs = D.minhash_coeffs(16, 42)
-    N = 8
-    pw = [pow(D.HASH_BASE, N - 1 - k, D.HASH_MOD) for k in range(N)]
-
-    def winfp(i):
-        h = F.lit(0).cast("long")
-        for k in range(N):
-            h = (
-                h + F.element_at("__mh_codes", i + F.lit(k)) * F.lit(pw[k])
-            ) % F.lit(D.HASH_MOD)
-        return h
-
-    from kaer_spark.operators.util import ensure_parallelism
-
-    built_base = (
-        ensure_parallelism(docs.filter(F.length("text") >= N))
-        .withColumn("__mh_codes", D._codes_col("text"))
-        .withColumn(
-            "__mh_fps",
-            F.array_distinct(
-                F.transform(
-                    F.sequence(F.lit(1), F.length("text") - N + 1), winfp
-                )
-            ),
-        )
-    )
-    built_sig = F.array(
-        *[
-            F.array_min(
-                F.transform("__mh_fps", lambda f: (f * a + b) % D.HASH_MOD)
-            )
-            for a, b in coeffs
-        ]
-    )
-    built = built_base.select(
-        F.col("doc_id").alias("id"), built_sig.alias("sig")
-    )
     parsed = D.minhash_signatures(
-        docs, "doc_id", "text", N, 16, 42, "char"
+        docs, "doc_id", "text", 8, 16, 42, "char"
     ).select("id", "sig")
-    # plan shapes differ by the pruned shingles projection, so compare
-    # values row-for-row (the slot trees themselves are asserted above
-    # via the shared _win_fps machinery and verified sameSemantics in
-    # the banded check below)
-    assert parsed.exceptAll(built).count() == 0
-    assert built.exceptAll(parsed).count() == 0
-
     # band keys: parsed text vs the per-band struct builder
     sigs = parsed.localCheckpoint(eager=False)
     nb = D._minhash_banded(sigs, 4, 4)

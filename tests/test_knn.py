@@ -82,6 +82,35 @@ def test_vector_functions_vs_numpy(embeddings):
         assert abs(r["cos"] - expect_cos) < 1e-9
 
 
+def test_cached_expr_concurrent_builders(spark, monkeypatch):
+    """Driver threads share the parsed-expression cache: concurrent
+    misses, hits and evictions neither raise nor overgrow it. A small
+    cache and a short thread switch interval make evicting a key another
+    thread has just looked up likely."""
+    import sys
+    from collections import OrderedDict
+    from concurrent.futures import ThreadPoolExecutor
+
+    import kaer_spark.functions.vector as V
+
+    monkeypatch.setattr(V, "_expr_cache", OrderedDict())
+    monkeypatch.setattr(V, "_EXPR_CACHE_MAX", 4)
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+
+    def build(t):
+        for i in range(100):
+            V.cached_expr(f"{t} * 1000 + {i}")  # distinct: a miss
+            V.cached_expr(f"{i % 3} + 0")  # shared: mostly hits
+
+    try:
+        with ThreadPoolExecutor(8) as ex:
+            list(ex.map(build, range(8), timeout=120))
+    finally:
+        sys.setswitchinterval(interval)
+    assert 0 < len(V._expr_cache) <= V._EXPR_CACHE_MAX
+
+
 def test_knn_join_matches_per_query_exact(corpus, embeddings):
     queries = embeddings.select("vec_id", "embedding").filter(F.col("vec_id") < 3)
     out = knn_join(

@@ -392,13 +392,24 @@ def test_dedup_keep_best_broadcasts_small_cluster_side(documents):
 def test_duplicate_passages_no_expand_distinct(documents):
     """The report's mixed countDistinct+count+min used to plan an Expand
     (row set ×2 before the shuffle, measured 3.6× slower at sf0.1); the
-    two-level aggregate shape must keep Expand out of the plan."""
-    from kaer_spark.operators.dedup import duplicate_passages
+    two-level aggregate shape must keep Expand out of the plan. The
+    other window-hash operators (MinHash char signatures, winnowing)
+    stay JVM expressions too: no Python eval operator in any of them."""
+    from kaer_spark.operators.dedup import (
+        duplicate_passages,
+        minhash_signatures,
+        winnow_fingerprints,
+    )
 
     plan = executed_plan(duplicate_passages(documents, length=24, min_docs=2))
     assert "Expand" not in plan
     assert "Python" not in plan
     assert "Exchange SinglePartition" not in plan
+    for df in (
+        minhash_signatures(documents, unit="char"),
+        winnow_fingerprints(documents),
+    ):
+        assert "Python" not in executed_plan(df)
 
 
 def test_passage_overlap_between_plan_shape(documents):

@@ -353,11 +353,11 @@ def _ensure_shingle_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from kaer_spark.operators.dedup import (
-        _write_index_meta,
         build_shingle_index,
         read_shingle_index_meta,
         refresh_shingle_index,
     )
+    from kaer_spark.operators.util import write_sidecar
 
     src = os.path.join(sf_dir, "documents.parquet")
     fp = _fixture_fp(src)
@@ -380,7 +380,7 @@ def _ensure_shingle_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     meta = refresh_shingle_index(docs, path)
     meta["source_fp"] = fp
     meta["caught_up"] = True
-    _write_index_meta(path, "shingle_index.json", meta)
+    write_sidecar(path, "shingle_index.json", meta)
     return path
 
 
@@ -690,10 +690,11 @@ def _ensure_ivf_index(spark: SparkSession, sf_dir: str) -> str:
         _t(spark, sf_dir, "embeddings"), path, cells=8, fit="deterministic"
     )
     # stamp the fixture fingerprint the same way _ensure_pq_index does
-    from kaer_spark.operators.index_store import META_FILE, _write_meta_atomic
+    from kaer_spark.operators.index_store import META_FILE
+    from kaer_spark.operators.util import write_sidecar
 
     meta["source_fp"] = fp
-    _write_meta_atomic(path, META_FILE, meta)
+    write_sidecar(path, META_FILE, meta)
     return path
 
 
@@ -859,12 +860,12 @@ def _q_pq_index_catchup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from kaer_spark.operators.index_store import (
         PQ_META_FILE,
-        _write_meta_atomic,
         build_pq_index,
         pq_index_topk,
         read_pq_meta,
         refresh_pq_index,
     )
+    from kaer_spark.operators.util import write_sidecar
 
     import hashlib
     import tempfile
@@ -887,7 +888,7 @@ def _q_pq_index_catchup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         meta = refresh_pq_index(embs, path)
         meta["caught_up"] = True
-        _write_meta_atomic(path, PQ_META_FILE, meta)
+        write_sidecar(path, PQ_META_FILE, meta)
     return pq_index_topk(
         spark, path, embs, QVEC, topk=12, shortlist=40
     ).select("vec_id", F.col("_score").alias("l2sq"))
@@ -2986,11 +2987,11 @@ def _ensure_minhash_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from kaer_spark.operators.dedup import (
-        _write_index_meta,
         build_minhash_index,
         read_minhash_index_meta,
         refresh_minhash_index,
     )
+    from kaer_spark.operators.util import write_sidecar
 
     src = os.path.join(sf_dir, "documents.parquet")
     fp = _fixture_fp(src)
@@ -3014,7 +3015,7 @@ def _ensure_minhash_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     meta = refresh_minhash_index(odd, path)
     meta["source_fp"] = fp
     meta["caught_up"] = True
-    _write_index_meta(path, "minhash_index.json", meta)
+    write_sidecar(path, "minhash_index.json", meta)
     return path
 
 
@@ -3177,11 +3178,11 @@ def _ensure_signlsh_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from kaer_spark.operators.dedup import (
-        _write_index_meta,
         build_signlsh_index,
         read_signlsh_index_meta,
         refresh_signlsh_index,
     )
+    from kaer_spark.operators.util import write_sidecar
 
     src = os.path.join(sf_dir, "embeddings.parquet")
     fp = _fixture_fp(src)
@@ -3205,7 +3206,7 @@ def _ensure_signlsh_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     meta = refresh_signlsh_index(odd, path)
     meta["source_fp"] = fp
     meta["caught_up"] = True
-    _write_index_meta(path, "signlsh_index.json", meta)
+    write_sidecar(path, "signlsh_index.json", meta)
     return path
 
 
@@ -3245,11 +3246,11 @@ def _ensure_fuzzy_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from kaer_spark.operators.dedup import (
-        _write_index_meta,
         build_fuzzy_index,
         read_fuzzy_index_meta,
         refresh_fuzzy_index,
     )
+    from kaer_spark.operators.util import write_sidecar
 
     src = os.path.join(sf_dir, "documents.parquet")
     fp = _fixture_fp(src)
@@ -3272,7 +3273,7 @@ def _ensure_fuzzy_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     meta = refresh_fuzzy_index(odd, path)
     meta["source_fp"] = fp
     meta["caught_up"] = True
-    _write_index_meta(path, "fuzzy_index.json", meta)
+    write_sidecar(path, "fuzzy_index.json", meta)
     return path
 
 
@@ -4076,11 +4077,11 @@ def _ensure_winnow_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     import tempfile
 
     from kaer_spark.operators.dedup import (
-        _write_index_meta,
         build_winnow_index,
         read_winnow_index_meta,
         refresh_winnow_index,
     )
+    from kaer_spark.operators.util import write_sidecar
 
     src = os.path.join(sf_dir, "documents.parquet")
     fp = _fixture_fp(src)
@@ -4101,7 +4102,7 @@ def _ensure_winnow_index_catchup(spark: SparkSession, sf_dir: str) -> str:
     meta = refresh_winnow_index(odd, path)
     meta["source_fp"] = fp
     meta["caught_up"] = True
-    _write_index_meta(path, "winnow_index.json", meta)
+    write_sidecar(path, "winnow_index.json", meta)
     return path
 
 

@@ -33,7 +33,8 @@ from __future__ import annotations
 import json
 import os
 import shutil
-from typing import Any, Mapping, Sequence
+from dataclasses import dataclass
+from typing import Any, Callable, Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -49,6 +50,8 @@ from kaer_spark.embeddings import (
 from kaer_spark.filters import compile_filter
 from kaer_spark.filters_json import compile_filter_json
 from kaer_spark.functions.vector import l2sq
+from kaer_spark.operators import dedup, index_store, text_index
+from kaer_spark.operators.util import read_sidecar, write_sidecar
 
 DOC_COL = "_m_doc"  # reference: db/db.go:18
 ID_COL = "_m_id"  # reference: db/db.go:19
@@ -204,22 +207,62 @@ def dense_ids_with_count(
     return out, acc - start
 
 
-#: every at-rest artifact family a collection can own: meta flag → the
-#: directory under the collection root. Snapshot export/import, and any
-#: future whole-collection op, iterate THIS table — a new family added
-#: here is automatically carried by export_to/import_collection (the r17
-#: fix: export copied only index/text_index, so a snapshot's sidecar
-#: claimed artifacts the destination didn't have).
-INDEX_DIRS: dict[str, str] = {
-    "has_index": "index",
-    "has_text_index": "text_index",
-    "has_pq_index": "pq_index",
-    "has_minhash_index": "minhash_index",
-    "has_signlsh_index": "signlsh_index",
-    "has_shingle_index": "shingle_index",
-    "has_fuzzy_index": "fuzzy_index",
-    "has_winnow_index": "winnow_index",
-}
+@dataclass(frozen=True)
+class IndexFamily:
+    """One at-rest index family a collection can own. Its directory
+    under the collection root names the rest: the ``has_<dir>`` catalog
+    flag, the ``<dir>_path`` property and the ``build_<dir>`` /
+    ``refresh_<dir>`` methods of :class:`Collection`."""
+
+    name: str  # index_health() key
+    dirname: str
+    read_meta: Callable[[str], dict]
+    stats: Callable[..., DataFrame]  # (spark, path, corpus=) report
+    geometry: tuple[str, ...]  # sidecar keys a rewrite rebuilds with
+
+    @property
+    def flag(self) -> str:
+        return "has_" + self.dirname
+
+
+#: every at-rest index family a collection can own, in refresh order.
+#: Ingest refresh, the rewrite rebuild, index_health, stats and snapshot
+#: export/import all iterate THIS table, so a family added here is carried
+#: everywhere at once.
+INDEX_FAMILIES: tuple[IndexFamily, ...] = (
+    IndexFamily(
+        "ivf", "index", index_store.read_index_meta,
+        index_store.ivf_index_stats, ("cells", "fit", "seed"),
+    ),
+    IndexFamily(
+        "text", "text_index", text_index.read_text_index_meta,
+        text_index.text_index_stats, ("n_buckets",),
+    ),
+    IndexFamily(
+        "pq", "pq_index", index_store.read_pq_meta,
+        index_store.pq_index_stats, ("m", "k", "cells", "fit", "seed"),
+    ),
+    IndexFamily(
+        "minhash", "minhash_index", dedup.read_minhash_index_meta,
+        dedup.minhash_index_stats, ("n", "num_hashes", "bands", "seed"),
+    ),
+    IndexFamily(
+        "signlsh", "signlsh_index", dedup.read_signlsh_index_meta,
+        dedup.signlsh_index_stats, ("bands", "bits_per_band", "seed"),
+    ),
+    IndexFamily(
+        "shingle", "shingle_index", dedup.read_shingle_index_meta,
+        dedup.shingle_index_stats, ("n", "max_doc_freq", "unit"),
+    ),
+    IndexFamily(
+        "fuzzy", "fuzzy_index", dedup.read_fuzzy_index_meta,
+        dedup.fuzzy_index_stats, ("max_edits", "key_len"),
+    ),
+    IndexFamily(
+        "winnow", "winnow_index", dedup.read_winnow_index_meta,
+        dedup.winnow_index_stats, ("k", "window"),
+    ),
+)
 
 
 class Collection:
@@ -243,10 +286,7 @@ class Collection:
         where neither a complete directory nor the recipe to restore one
         exists (the claim ``compact``'s docstring makes)."""
         manifest = os.path.join(self.path, SWAP_MANIFEST)
-        mtmp = manifest + ".tmp"
-        with open(mtmp, "w") as f:
-            json.dump({"tmp": os.path.basename(tmp)}, f)
-        os.replace(mtmp, manifest)
+        write_sidecar(self.path, SWAP_MANIFEST, {"tmp": os.path.basename(tmp)})
         old = self.data_path + ".old"
         if os.path.isdir(old):
             shutil.rmtree(old)
@@ -301,10 +341,7 @@ class Collection:
         return os.path.join(self.path, "winnow_index")
 
     def _save_meta(self) -> None:
-        tmp = self.meta_path + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(self.meta, f, indent=2)
-        os.replace(tmp, self.meta_path)
+        write_sidecar(self.path, "collection.json", self.meta)
 
     # -- data access -----------------------------------------------------
     def df(self) -> DataFrame:
@@ -407,33 +444,12 @@ class Collection:
         merged = list(stored) + [f for f in df.schema.fields if f.name not in seen]
         self.meta["schema"] = json.dumps(T.StructType(merged).jsonValue())
         self._save_meta()
-        if self.meta.get("has_index"):
-            # the reference adds every inserted vector to its index inline
-            # (db/db.go:87-89); here the catch-up is an id-range append job
-            self.refresh_index()
-        if self.meta.get("has_text_index"):
-            self.refresh_text_index()
-        if self.meta.get("has_pq_index"):
-            # r15: the PQ code table rode the O8 catch-up on the STREAM
-            # ingest path (stream_insert pq_index_path=, r14) but batch
-            # insert silently left it stale — all three index families now
-            # refresh on both ingest paths
-            self.refresh_pq_index()
-        # r16: the collection-owned decontamination artifacts obey the
-        # same parity rule — every index the collection owns refreshes on
-        # every ingest path, or index_health shows the lag
-        if self.meta.get("has_minhash_index"):
-            self.refresh_minhash_index()
-        if self.meta.get("has_signlsh_index"):
-            self.refresh_signlsh_index()
-        # [r17] the last two families join the parity rule (shingle +
-        # fuzzy are collection-ownable now — r16 verdict missing #2)
-        if self.meta.get("has_shingle_index"):
-            self.refresh_shingle_index()
-        if self.meta.get("has_fuzzy_index"):
-            self.refresh_fuzzy_index()
-        if self.meta.get("has_winnow_index"):
-            self.refresh_winnow_index()
+        # every index the collection owns catches up on every ingest path
+        # (the reference adds each inserted vector to its index inline,
+        # db/db.go:87-89; here each catch-up is an id-range append job)
+        for fam in INDEX_FAMILIES:
+            if self.meta.get(fam.flag):
+                getattr(self, "refresh_" + fam.dirname)()
         return next_id
 
     # -- index artifact (reference O7/O8/O10/O14, db/db.go:102-109,176-207)
@@ -760,63 +776,14 @@ class Collection:
         exactly how far each index trails before the matching
         ``refresh_*`` call; rebuild-trigger policy lives on each report
         operator's docstring."""
-        out: dict[str, DataFrame] = {}
-        if self.meta.get("has_index"):
-            from kaer_spark.operators.index_store import ivf_index_stats
-
-            out["ivf"] = ivf_index_stats(
-                self.ctx.spark, self.index_path, corpus=self.df()
+        return {
+            fam.name: fam.stats(
+                self.ctx.spark, os.path.join(self.path, fam.dirname),
+                corpus=self.df(),
             )
-        if self.meta.get("has_pq_index"):
-            from kaer_spark.operators.index_store import pq_index_stats
-
-            out["pq"] = pq_index_stats(
-                self.ctx.spark, self.pq_index_path, self.df(),
-                corpus_id_col=ID_COL, corpus_vec_col=EMB_COL,
-            )
-        if self.meta.get("has_text_index"):
-            from kaer_spark.operators.text_index import text_index_stats
-
-            out["text"] = text_index_stats(
-                self.ctx.spark, self.text_index_path,
-                corpus=self.df(), corpus_id_col=ID_COL,
-            )
-        if self.meta.get("has_minhash_index"):
-            from kaer_spark.operators.dedup import minhash_index_stats
-
-            out["minhash"] = minhash_index_stats(
-                self.ctx.spark, self.minhash_index_path,
-                corpus=self.df(), corpus_id_col=ID_COL,
-            )
-        if self.meta.get("has_signlsh_index"):
-            from kaer_spark.operators.dedup import signlsh_index_stats
-
-            out["signlsh"] = signlsh_index_stats(
-                self.ctx.spark, self.signlsh_index_path,
-                corpus=self.df(), corpus_id_col=ID_COL,
-            )
-        if self.meta.get("has_shingle_index"):
-            from kaer_spark.operators.dedup import shingle_index_stats
-
-            out["shingle"] = shingle_index_stats(
-                self.ctx.spark, self.shingle_index_path,
-                corpus=self.df(), corpus_id_col=ID_COL,
-            )
-        if self.meta.get("has_fuzzy_index"):
-            from kaer_spark.operators.dedup import fuzzy_index_stats
-
-            out["fuzzy"] = fuzzy_index_stats(
-                self.ctx.spark, self.fuzzy_index_path,
-                corpus=self.df(), corpus_id_col=ID_COL,
-            )
-        if self.meta.get("has_winnow_index"):
-            from kaer_spark.operators.dedup import winnow_index_stats
-
-            out["winnow"] = winnow_index_stats(
-                self.ctx.spark, self.winnow_index_path,
-                corpus=self.df(), corpus_id_col=ID_COL,
-            )
-        return out
+            for fam in INDEX_FAMILIES
+            if self.meta.get(fam.flag)
+        }
 
     def query_phrase(
         self, phrase: str, k: int | None = None
@@ -1173,8 +1140,9 @@ class Collection:
         (single-writer model, same as insert). Ids of surviving rows are
         unchanged and ``next_id`` does not regress, so id-stability
         invariants (index addressing, id-range pruning) hold; a dense-id
-        HOLE is fine — the allocator only ever moves forward. The IVF
-        index, if any, is rebuilt (cells reference deleted ids otherwise).
+        HOLE is fine — the allocator only ever moves forward. Every owned
+        index is rebuilt under its built geometry (it references deleted
+        ids otherwise).
         """
         if not self.meta.get("has_data"):
             return 0
@@ -1194,9 +1162,9 @@ class Collection:
 
     def _commit_rewrite(self, keep: DataFrame, obs: Observation) -> int:
         """Atomically replace the collection data with ``keep`` (directory
-        swap, single-writer), refresh meta and rebuild the index if one
-        exists. ``obs`` must observe the pre-rewrite total on the scan
-        feeding ``keep``. Returns rows removed."""
+        swap, single-writer), refresh meta and rebuild every index the
+        collection owns. ``obs`` must observe the pre-rewrite total on the
+        scan feeding ``keep``. Returns rows removed."""
         tmp = self.data_path + ".rewrite"
         keep.write.mode("overwrite").parquet(tmp)
         total = int(obs.get["total"])
@@ -1205,139 +1173,24 @@ class Collection:
         if kept_n == 0:
             self.meta["has_data"] = False
         self._save_meta()
-        if self.meta.get("has_index"):
-            if kept_n == 0:
-                shutil.rmtree(self.index_path, ignore_errors=True)
-                self.meta["has_index"] = False
+        # a rewrite can change or remove any document, which an append-only
+        # refresh cannot express: drop every owned index (none survives an
+        # empty collection) or rebuild it under its sidecar's geometry —
+        # cleared first, so no partition directory of the old build lingers
+        for fam in INDEX_FAMILIES:
+            if not self.meta.get(fam.flag):
+                continue
+            path = os.path.join(self.path, fam.dirname)
+            built = fam.read_meta(path) if kept_n else None
+            shutil.rmtree(path, ignore_errors=True)
+            if built is None:
+                self.meta[fam.flag] = False
                 self._save_meta()
-            else:
-                from kaer_spark.operators.index_store import read_index_meta
-
-                im = read_index_meta(self.index_path)
-                self.build_index(
-                    cells=min(int(im.get("cells", 16)), kept_n),
-                    fit=im.get("fit", "kmeans"),
-                )
-        if self.meta.get("has_text_index"):
-            if kept_n == 0:
-                shutil.rmtree(self.text_index_path, ignore_errors=True)
-                self.meta["has_text_index"] = False
-                self._save_meta()
-            else:
-                from kaer_spark.operators.text_index import (
-                    read_text_index_meta,
-                )
-
-                tm = read_text_index_meta(self.text_index_path)
-                # a rewrite can change/remove any document: rebuild from
-                # scratch (clear first — the postings layout is
-                # directory-partitioned, a plain overwrite could leave
-                # stale buckets under dynamic partition-overwrite modes)
-                shutil.rmtree(self.text_index_path, ignore_errors=True)
-                self.build_text_index(n_buckets=int(tm.get("n_buckets", 64)))
-        if self.meta.get("has_pq_index"):
-            # [r17] the one family _commit_rewrite silently skipped: a
-            # delete left deleted ids IN the code table, so compressed
-            # serving (query_pq) could shortlist ghost rows. Same
-            # rebuild-under-sidecar-geometry rule as every other family.
-            if kept_n == 0:
-                shutil.rmtree(self.pq_index_path, ignore_errors=True)
-                self.meta["has_pq_index"] = False
-                self._save_meta()
-            else:
-                from kaer_spark.operators.index_store import read_pq_meta
-
-                pm = read_pq_meta(self.pq_index_path)
-                shutil.rmtree(self.pq_index_path, ignore_errors=True)
-                self.build_pq_index(
-                    m=int(pm["m"]), k=int(pm["k"]),
-                    cells=pm.get("cells"),
-                    fit=pm.get("fit", "deterministic"),
-                    seed=int(pm.get("seed", 42)),
-                )
-        if self.meta.get("has_minhash_index"):
-            if kept_n == 0:
-                shutil.rmtree(self.minhash_index_path, ignore_errors=True)
-                self.meta["has_minhash_index"] = False
-                self._save_meta()
-            else:
-                from kaer_spark.operators.dedup import (
-                    read_minhash_index_meta,
-                )
-
-                mm = read_minhash_index_meta(self.minhash_index_path)
-                # a rewrite removes documents; an append-only refresh
-                # cannot express that — rebuild under the same geometry
-                shutil.rmtree(self.minhash_index_path, ignore_errors=True)
-                self.build_minhash_index(
-                    n=int(mm["n"]), num_hashes=int(mm["num_hashes"]),
-                    bands=int(mm["bands"]), seed=int(mm["seed"]),
-                )
-        if self.meta.get("has_signlsh_index"):
-            if kept_n == 0:
-                shutil.rmtree(self.signlsh_index_path, ignore_errors=True)
-                self.meta["has_signlsh_index"] = False
-                self._save_meta()
-            else:
-                from kaer_spark.operators.dedup import (
-                    read_signlsh_index_meta,
-                )
-
-                sm = read_signlsh_index_meta(self.signlsh_index_path)
-                shutil.rmtree(self.signlsh_index_path, ignore_errors=True)
-                self.build_signlsh_index(
-                    bands=int(sm["bands"]),
-                    bits_per_band=int(sm["bits_per_band"]),
-                    seed=int(sm["seed"]),
-                )
-        if self.meta.get("has_shingle_index"):
-            if kept_n == 0:
-                shutil.rmtree(self.shingle_index_path, ignore_errors=True)
-                self.meta["has_shingle_index"] = False
-                self._save_meta()
-            else:
-                from kaer_spark.operators.dedup import (
-                    read_shingle_index_meta,
-                )
-
-                gm = read_shingle_index_meta(self.shingle_index_path)
-                shutil.rmtree(self.shingle_index_path, ignore_errors=True)
-                self.build_shingle_index(
-                    n=int(gm["n"]),
-                    max_doc_freq=gm.get("max_doc_freq"),
-                    unit=gm.get("unit", "char"),
-                )
-        if self.meta.get("has_fuzzy_index"):
-            if kept_n == 0:
-                shutil.rmtree(self.fuzzy_index_path, ignore_errors=True)
-                self.meta["has_fuzzy_index"] = False
-                self._save_meta()
-            else:
-                from kaer_spark.operators.dedup import (
-                    read_fuzzy_index_meta,
-                )
-
-                fm = read_fuzzy_index_meta(self.fuzzy_index_path)
-                shutil.rmtree(self.fuzzy_index_path, ignore_errors=True)
-                self.build_fuzzy_index(
-                    max_edits=int(fm["max_edits"]),
-                    key_len=int(fm["key_len"]),
-                )
-        if self.meta.get("has_winnow_index"):
-            if kept_n == 0:
-                shutil.rmtree(self.winnow_index_path, ignore_errors=True)
-                self.meta["has_winnow_index"] = False
-                self._save_meta()
-            else:
-                from kaer_spark.operators.dedup import (
-                    read_winnow_index_meta,
-                )
-
-                wm = read_winnow_index_meta(self.winnow_index_path)
-                shutil.rmtree(self.winnow_index_path, ignore_errors=True)
-                self.build_winnow_index(
-                    k=int(wm["k"]), window=int(wm["window"])
-                )
+                continue
+            geometry = {k: built[k] for k in fam.geometry if k in built}
+            if fam.name == "ivf":  # k-means fits at most one cell per row
+                geometry["cells"] = min(geometry.get("cells", 16), kept_n)
+            getattr(self, "build_" + fam.dirname)(**geometry)
         return total - kept_n
 
     def near_duplicates(
@@ -1732,15 +1585,15 @@ class Collection:
                 self.data_path, os.path.join(path, "data"), dirs_exist_ok=True
             )
         shutil.copy2(self.meta_path, os.path.join(path, "collection.json"))
-        # EVERY owned artifact family rides the snapshot (INDEX_DIRS —
+        # EVERY owned artifact family rides the snapshot (INDEX_FAMILIES —
         # r17: pq/minhash/signlsh/shingle/fuzzy/winnow were silently
         # dropped while the copied sidecar still claimed them, so the
         # imported collection's index_health/serving paths crashed)
-        for flag, dirname in INDEX_DIRS.items():
-            src = os.path.join(self.path, dirname)
-            if self.meta.get(flag) and os.path.isdir(src):
+        for fam in INDEX_FAMILIES:
+            src = os.path.join(self.path, fam.dirname)
+            if self.meta.get(fam.flag) and os.path.isdir(src):
                 shutil.copytree(
-                    src, os.path.join(path, dirname), dirs_exist_ok=True
+                    src, os.path.join(path, fam.dirname), dirs_exist_ok=True
                 )
         return path
 
@@ -1749,8 +1602,9 @@ class Collection:
 
     def stats(self) -> dict:
         """One-call introspection: document count, id high-water, embedding
-        dimension, schemaless flag, and index geometry (cells/fit/max_id)
-        when an index exists — the catalog-level view a reference user gets
+        dimension, schemaless flag, one ``has_*`` flag per index family
+        (:data:`INDEX_FAMILIES`), and IVF geometry (cells/fit/max_id)
+        when an IVF index exists — the catalog-level view a reference user gets
         from its meta collection (``db/meta.go:11-28``), without scanning
         more than one count job."""
         out = {
@@ -1758,16 +1612,14 @@ class Collection:
             "n_docs": self.count(),
             "next_id": int(self.meta.get("next_id", 0)),
             "schemaless": bool(self.meta.get("schemaless", False)),
-            "has_index": bool(self.meta.get("has_index", False)),
-            "has_text_index": bool(self.meta.get("has_text_index", False)),
-            "has_pq_index": bool(self.meta.get("has_pq_index", False)),
         }
+        out.update(
+            {fam.flag: bool(self.meta.get(fam.flag)) for fam in INDEX_FAMILIES}
+        )
         if self.meta.get("dim"):
             out["embedding_dim"] = int(self.meta["dim"])
         if out["has_index"]:
-            from kaer_spark.operators.index_store import read_index_meta
-
-            im = read_index_meta(self.index_path)
+            im = index_store.read_index_meta(self.index_path)
             out["index"] = {
                 "cells": im.get("cells"),
                 "fit": im.get("fit", "kmeans"),
@@ -1903,9 +1755,7 @@ class KaerContext:
         dest = os.path.join(self.root, name)
         if os.path.exists(os.path.join(dest, "collection.json")):
             raise ValueError(f"collection {name} already exists")
-        src_meta = os.path.join(snapshot_path, "collection.json")
-        with open(src_meta) as f:
-            meta = json.load(f)
+        meta = read_sidecar(snapshot_path, "collection.json")
         os.makedirs(dest, exist_ok=True)
         if os.path.isdir(os.path.join(snapshot_path, "data")):
             shutil.copytree(
@@ -1913,11 +1763,11 @@ class KaerContext:
                 os.path.join(dest, "data"),
                 dirs_exist_ok=True,
             )
-        for idx_dir in INDEX_DIRS.values():
-            if os.path.isdir(os.path.join(snapshot_path, idx_dir)):
+        for fam in INDEX_FAMILIES:
+            if os.path.isdir(os.path.join(snapshot_path, fam.dirname)):
                 shutil.copytree(
-                    os.path.join(snapshot_path, idx_dir),
-                    os.path.join(dest, idx_dir),
+                    os.path.join(snapshot_path, fam.dirname),
+                    os.path.join(dest, fam.dirname),
                     dirs_exist_ok=True,
                 )
         meta["name"] = name
@@ -1930,11 +1780,10 @@ class KaerContext:
     def get_collection(self, name: str) -> Collection:
         if name in self._collections:
             return self._collections[name]
-        path = os.path.join(self.root, name, "collection.json")
-        if not os.path.exists(path):
+        path = os.path.join(self.root, name)
+        if not os.path.exists(os.path.join(path, "collection.json")):
             raise CollectionNotFound(name)
-        with open(path) as f:
-            meta = json.load(f)
+        meta = read_sidecar(path, "collection.json")
         coll = Collection(self, name, meta)
         self._collections[name] = coll
         return coll

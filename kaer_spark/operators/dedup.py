@@ -41,7 +41,13 @@ from kaer_spark.functions.vector import cached_expr, dot, vector_norm
 from kaer_spark.operators.util import (
     ensure_parallelism,
     global_ranked,
+    json_id,
+    read_sidecar,
+    refresh_above_watermark,
+    stored_ids_above,
+    watermark_floor,
     watermark_health_cols,
+    write_sidecar,
 )
 
 HASH_MOD = 1_000_000_007
@@ -290,7 +296,7 @@ def build_shingle_index(
     sh.select("id", F.size("shingles").alias("sz")).write.mode(
         "overwrite"
     ).parquet(_os.path.join(path, "sizes"))
-    max_id = _json_id(df.agg(F.max(F.col(id_col))).collect()[0][0])
+    max_id = json_id(df.agg(F.max(F.col(id_col))).collect()[0][0])
     seg = _shingle_seg_name(None, max_id)
     sh.select(F.explode("shingles").alias("g")).groupBy("g").agg(
         F.count("*").alias("cnt")
@@ -312,7 +318,7 @@ def build_shingle_index(
         "hot_dir": hot_dir,
         "corr_dir": corr_dir,
     }
-    _write_index_meta(path, "shingle_index.json", meta)
+    write_sidecar(path, "shingle_index.json", meta)
     return meta
 
 
@@ -400,8 +406,8 @@ def refresh_shingle_index(
     ``advance_to`` (optional) floors the flipped watermark — for
     screen-and-drop callers (``streaming.ingest.neardup_ingest_batch``):
     a dropped doc's id is decided but never stored. Ids must be int or
-    string (enforced at build by :func:`_json_id`) and append-only above
-    the watermark."""
+    string (enforced at build by :func:`~kaer_spark.operators.util.json_id`)
+    and append-only above the watermark."""
     import os as _os
     import shutil as _shutil
 
@@ -419,22 +425,18 @@ def refresh_shingle_index(
     post_dir = _os.path.join(path, "postings")
     sizes_dir = _os.path.join(path, "sizes")
     full_tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
-    new_max = _json_id(full_tail.agg(F.max(F.col(icol))).collect()[0][0])
+    new_max = json_id(full_tail.agg(F.max(F.col(icol))).collect()[0][0])
     if new_max is None:
         # nothing above the watermark — still honor the advance_to floor
         # (and stamp it) so dropped ids stay decided
-        stamp = wm
-        if advance_to is not None and (stamp is None or advance_to > stamp):
-            stamp = advance_to
-        if meta.get("max_id") != _json_id(stamp):
-            meta["max_id"] = _json_id(stamp)
-            _write_index_meta(path, "shingle_index.json", meta)
+        stamp = json_id(watermark_floor(wm, advance_to))
+        if stamp != wm:
+            meta["max_id"] = stamp
+            write_sidecar(path, "shingle_index.json", meta)
         return meta
     # docs whose sizes row landed are fully indexed (sizes write LAST
     # among the per-id tables) — drop them from the tail entirely
-    done = spark.read.parquet(sizes_dir).select("id")
-    if wm is not None:
-        done = done.filter(F.col("id") > F.lit(wm))
+    done = stored_ids_above(spark, sizes_dir, wm)
     tail = full_tail.join(
         done.select(F.col("id").alias(icol)), [icol], "left_anti"
     )
@@ -450,9 +452,7 @@ def refresh_shingle_index(
         .localCheckpoint(eager=False)
     )
     # ghost guard for the postings-landed/sizes-missing window
-    ghost = spark.read.parquet(post_dir).select("id")
-    if wm is not None:
-        ghost = ghost.filter(F.col("id") > F.lit(wm))
+    ghost = stored_ids_above(spark, post_dir, wm)
     sh.select("id", F.explode("shingles").alias("g")).join(
         ghost.distinct(), "id", "left_anti"
     ).write.mode("append").parquet(post_dir)
@@ -468,9 +468,7 @@ def refresh_shingle_index(
         F.count("*").alias("cnt")
     ).write.mode("overwrite").parquet(_os.path.join(path, "df", seg))
     segs = list(meta["df_segments"]) + [seg]
-    wm_new = new_max
-    if advance_to is not None and advance_to > wm_new:
-        wm_new = advance_to
+    wm_new = json_id(watermark_floor(new_max, advance_to))
     hot_dir = meta.get("hot_dir")
     corr_dir = meta.get("corr_dir")
     if meta["max_doc_freq"] is not None:
@@ -478,11 +476,11 @@ def refresh_shingle_index(
         corr_dir = _write_shingle_hot(
             spark, path, segs, meta["max_doc_freq"], hot_dir
         )
-    meta["max_id"] = _json_id(wm_new)
+    meta["max_id"] = wm_new
     meta["df_segments"] = segs
     meta["hot_dir"] = hot_dir
     meta["corr_dir"] = corr_dir
-    _write_index_meta(path, "shingle_index.json", meta)
+    write_sidecar(path, "shingle_index.json", meta)
     # sweep orphans from crashed grown-window replays (safe AFTER the
     # flip: anything not listed in the live sidecar is dead by contract)
     for sub, live in (
@@ -521,9 +519,6 @@ def write_shingle_bucketed_table(
     tests/test_dedup.py). Sizes land in ``<table>_sizes`` (id-keyed,
     broadcast-sized joins); parameters in the ``meta_path`` sidecar, same
     format as the parquet artifact so either layout serves the scorers."""
-    import json as _json
-    import os as _os
-
     from kaer_spark.sources.files import write_bucketed
 
     sh = (
@@ -559,11 +554,7 @@ def write_shingle_bucketed_table(
         "table": table,
         "num_buckets": int(num_buckets),
     }
-    _os.makedirs(meta_path, exist_ok=True)
-    tmp = _os.path.join(meta_path, "shingle_index.json.tmp")
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, _os.path.join(meta_path, "shingle_index.json"))
+    write_sidecar(meta_path, "shingle_index.json", meta)
     return meta
 
 
@@ -690,11 +681,7 @@ def shingle_index_stats(
 
 
 def read_shingle_index_meta(path: str) -> dict:
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "shingle_index.json")) as f:
-        return _json.load(f)
+    return read_sidecar(path, "shingle_index.json")
 
 
 def _indexed_pair_counts(spark, path: str) -> DataFrame:
@@ -1386,9 +1373,9 @@ def build_fuzzy_index(
         "text_col": text_col,
         "max_edits": int(max_edits),
         "key_len": int(key_len),
-        "max_id": _json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
+        "max_id": json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
     }
-    _write_index_meta(path, "fuzzy_index.json", meta)
+    write_sidecar(path, "fuzzy_index.json", meta)
     return meta
 
 
@@ -1403,55 +1390,27 @@ def refresh_fuzzy_index(
     ``id > meta.max_id`` are keyed and segmented through the
     SIDECAR-frozen geometry (the same :func:`_fuzzy_segment_rows` body
     the build uses) and appended — row-identical to a from-scratch build
-    over the union. Single-table artifact, so one crash window: a replay
-    anti-joins the tail against ids already above the watermark
-    (id-column-only, predicate-pushed scan of the index). Blank docs are
-    excluded by :func:`_fuzzy_keyed` exactly as at build, but still
-    advance the watermark (``max_id`` covers the full batch — the
-    minhash-index discipline). ``advance_to`` floors the flip for
+    over the union. Single-table artifact, so one crash window, closed by
+    the shared replay guard (``util.refresh_above_watermark``). Blank
+    docs are excluded by :func:`_fuzzy_keyed` exactly as at build, but
+    still advance the watermark. ``advance_to`` floors the flip for
     screen-and-drop callers."""
     import os as _os
 
-    spark = df.sparkSession
-    meta = read_fuzzy_index_meta(path)
-    icol = meta["id_col"]
-    seg_dir = _os.path.join(path, "segments")
-    wm = meta.get("max_id")
-    if wm is None and "max_id" not in meta:
-        wm = spark.read.parquet(seg_dir).agg(F.max("id")).collect()[0][0]
-    tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
-    new_max = tail.agg(F.max(F.col(icol))).collect()[0][0]
-    if new_max is None:
-        stamp = wm
-        if advance_to is not None and (stamp is None or advance_to > stamp):
-            stamp = advance_to
-        if meta.get("max_id") != _json_id(stamp) or "max_id" not in meta:
-            meta["max_id"] = _json_id(stamp)
-            _write_index_meta(path, "fuzzy_index.json", meta)
-        return meta
-    ghost = spark.read.parquet(seg_dir).select("id")
-    if wm is not None:
-        ghost = ghost.filter(F.col("id") > F.lit(wm))
-    tail = tail.join(
-        ghost.distinct().select(F.col("id").alias(icol)), [icol], "left_anti"
+    def append(tail: DataFrame, meta: dict) -> None:
+        bounds = _fuzzy_bounds(meta["key_len"], meta["max_edits"])
+        _fuzzy_segment_rows(
+            _fuzzy_keyed(tail, meta["id_col"], meta["text_col"], meta["key_len"]),
+            bounds,
+        ).write.mode("append").parquet(_os.path.join(path, "segments"))
+
+    return refresh_above_watermark(
+        df, path, "fuzzy_index.json", "segments", append, advance_to=advance_to
     )
-    bounds = _fuzzy_bounds(meta["key_len"], meta["max_edits"])
-    _fuzzy_segment_rows(
-        _fuzzy_keyed(tail, icol, meta["text_col"], meta["key_len"]), bounds
-    ).write.mode("append").parquet(seg_dir)
-    if advance_to is not None and advance_to > new_max:
-        new_max = advance_to
-    meta["max_id"] = _json_id(new_max)
-    _write_index_meta(path, "fuzzy_index.json", meta)
-    return meta
 
 
 def read_fuzzy_index_meta(path: str) -> dict:
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "fuzzy_index.json")) as f:
-        return _json.load(f)
+    return read_sidecar(path, "fuzzy_index.json")
 
 
 def fuzzy_index_stats(
@@ -1991,43 +1950,10 @@ def build_minhash_index(
         "bands": int(bands),
         "seed": int(seed),
         "unit": unit,
-        "max_id": _json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
+        "max_id": json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
     }
-    _write_index_meta(path, "minhash_index.json", meta)
+    write_sidecar(path, "minhash_index.json", meta)
     return meta
-
-
-def _json_id(v):
-    """High-water id as stored in a sidecar (the ``text_index`` rule):
-    refreshable indexes support int and string id columns ONLY — both
-    JSON-round-trip losslessly AND order-consistently, which the
-    ``id > watermark`` refresh filters depend on. Anything else (dates,
-    decimals, binary) fails LOUD at build/refresh time instead of
-    raising a TypeError from ``json.dump`` at the sidecar write (after
-    the data tables already landed) or, worse, silently re-indexing rows
-    when the JSON form orders differently than the column."""
-    if v is None:
-        return None
-    if isinstance(v, bool) or not isinstance(v, (int, str)):
-        raise TypeError(
-            "refreshable index id columns must be int or string "
-            f"(watermark comparisons ride the JSON round-trip); got "
-            f"{type(v).__name__}: {v!r}"
-        )
-    return int(v) if isinstance(v, int) else v
-
-
-def _write_index_meta(path: str, filename: str, meta: dict) -> None:
-    """Sidecar writes are tmp + ``os.replace`` (the engine-wide rule): a
-    crash mid-write never leaves truncated JSON, and the watermark flip
-    is one atomic op."""
-    import json as _json
-    import os as _os
-
-    tmp = _os.path.join(path, filename + ".tmp")
-    with open(tmp, "w") as f:
-        _json.dump(meta, f)
-    _os.replace(tmp, _os.path.join(path, filename))
 
 
 def refresh_minhash_index(
@@ -2045,18 +1971,16 @@ def refresh_minhash_index(
     row derives from its document alone under the sidecar-frozen
     ``(n, num_hashes, bands, seed, unit)``, so appending the tail is
     row-identical to a from-scratch build over the union (pytest-pinned).
-    The shingle index stays rebuild-only BY DESIGN — its doc-freq cap is
-    corpus-global and an append would silently change which shingles are
-    over the cap (see :func:`build_shingle_index`).
 
-    Idempotent against BOTH crash windows (the ``refresh_text_index``
-    discipline — bands append lands first, shingles second, watermark
-    last): a replay anti-joins each append against ITS OWN table's ids
-    above the watermark (id-column-only, predicate-pushed scans of the
-    index, not the corpus), so crash-after-bands re-appends only the
-    missing shingles rows and crash-after-both only flips the watermark.
-    Pre-watermark artifacts (built before ``max_id`` was stamped) derive
-    the watermark from the stored shingles table once, then stamp it.
+    Idempotent against BOTH crash windows — bands append lands first,
+    shingles second, watermark last: the shared replay guard
+    (``util.refresh_above_watermark``) drops docs whose shingles row
+    landed, and the bands append is anti-joined against the bands
+    table's own ids above the watermark, so crash-after-bands re-appends
+    only the missing shingles rows and crash-after-both only flips the
+    watermark. Pre-watermark artifacts (built before ``max_id`` was
+    stamped) derive the watermark from the stored shingles table once,
+    then stamp it.
 
     ``advance_to`` (optional) floors the flipped watermark — for callers
     that SCREEN-and-drop (``streaming.ingest.neardup_ingest_batch``): a
@@ -2066,73 +1990,43 @@ def refresh_minhash_index(
     sidecar write covering both."""
     import os as _os
 
-    spark = df.sparkSession
-    meta = read_minhash_index_meta(path)
-    icol = meta["id_col"]
-    bands_dir = _os.path.join(path, "bands")
-    sh_dir = _os.path.join(path, "shingles")
-    wm = meta.get("max_id")
-    if wm is None and "max_id" not in meta:
-        wm = spark.read.parquet(sh_dir).agg(F.max("id")).collect()[0][0]
-    tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
-    new_max = tail.agg(F.max(F.col(icol))).collect()[0][0]
-    if new_max is None:
-        # nothing above the watermark: stamp the advance_to floor AND any
-        # watermark just derived from a pre-watermark artifact — so the
-        # next no-op refresh doesn't re-pay the derivation scan
-        stamp = wm
-        if advance_to is not None and (stamp is None or advance_to > stamp):
-            stamp = advance_to
-        if meta.get("max_id") != _json_id(stamp) or "max_id" not in meta:
-            meta["max_id"] = _json_id(stamp)
-            _write_index_meta(path, "minhash_index.json", meta)
-        return meta
-    # docs whose shingles row landed are fully indexed (shingles write
-    # LAST in both build and refresh) — drop them from the tail entirely
-    done = spark.read.parquet(sh_dir).select("id")
-    if wm is not None:
-        done = done.filter(F.col("id") > F.lit(wm))
-    tail = tail.join(
-        done.select(F.col("id").alias(icol)), [icol], "left_anti"
-    )
-    rows_per_band = meta["num_hashes"] // meta["bands"]
-    if presigned is not None:
-        # caller-owned fast path (minhash_near_dups docstring): reuse the
-        # batch's one signature pass, restricted to the guarded tail
-        sig = presigned.join(
-            tail.select(F.col(icol).alias("id")), "id", "left_semi"
+    def append(tail: DataFrame, meta: dict) -> None:
+        icol = meta["id_col"]
+        if presigned is not None:
+            # caller-owned fast path (minhash_near_dups docstring): reuse
+            # the batch's one signature pass, restricted to the guarded tail
+            sig = presigned.join(
+                tail.select(F.col(icol).alias("id")), "id", "left_semi"
+            )
+        else:
+            sig = minhash_signatures(
+                tail, icol, meta["text_col"], meta["n"], meta["num_hashes"],
+                meta["seed"], meta["unit"],
+            ).localCheckpoint(eager=False)
+        new_bands = _minhash_banded(
+            sig.select("id", "sig"), meta["bands"],
+            meta["num_hashes"] // meta["bands"],
         )
-    else:
-        sig = minhash_signatures(
-            tail, icol, meta["text_col"], meta["n"], meta["num_hashes"],
-            meta["seed"], meta["unit"],
-        ).localCheckpoint(eager=False)
-    new_bands = _minhash_banded(
-        sig.select("id", "sig"), meta["bands"], rows_per_band
+        # ghost guard for the OTHER window: bands landed, shingles did not
+        # — those docs are still in the tail (no shingles row) but their
+        # band rows must not land twice
+        bands_dir = _os.path.join(path, "bands")
+        ghost = stored_ids_above(df.sparkSession, bands_dir, meta["max_id"])
+        new_bands.join(ghost.distinct(), "id", "left_anti").write.mode(
+            "append"
+        ).parquet(bands_dir)
+        sig.select("id", "shingles").write.mode("append").parquet(
+            _os.path.join(path, "shingles")
+        )
+
+    return refresh_above_watermark(
+        df, path, "minhash_index.json", "shingles", append,
+        advance_to=advance_to,
     )
-    # ghost guard for the OTHER window: bands landed, shingles did not —
-    # those docs are still in the tail (no shingles row) but their band
-    # rows must not land twice
-    ghost = spark.read.parquet(bands_dir).select("id")
-    if wm is not None:
-        ghost = ghost.filter(F.col("id") > F.lit(wm))
-    new_bands.join(ghost.distinct(), "id", "left_anti").write.mode(
-        "append"
-    ).parquet(bands_dir)
-    sig.select("id", "shingles").write.mode("append").parquet(sh_dir)
-    if advance_to is not None and advance_to > new_max:
-        new_max = advance_to
-    meta["max_id"] = _json_id(new_max)
-    _write_index_meta(path, "minhash_index.json", meta)
-    return meta
 
 
 def read_minhash_index_meta(path: str) -> dict:
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "minhash_index.json")) as f:
-        return _json.load(f)
+    return read_sidecar(path, "minhash_index.json")
 
 
 def minhash_index_stats(
@@ -2926,9 +2820,9 @@ def build_signlsh_index(
         "bands": int(bands),
         "bits_per_band": int(bits_per_band),
         "seed": int(seed),
-        "max_id": _json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
+        "max_id": json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
     }
-    _write_index_meta(path, "signlsh_index.json", meta)
+    write_sidecar(path, "signlsh_index.json", meta)
     return meta
 
 
@@ -2983,73 +2877,42 @@ def refresh_signlsh_index(
     ``id > meta.max_id`` are keyed through the SIDECAR-frozen planes
     (:func:`_signlsh_inverted`, the same body the build uses) and
     appended — row-identical to a from-scratch build over the union
-    (pytest-pinned). Single-table artifact, so one crash window: a
-    replay after crash-between-append-and-watermark anti-joins the tail
-    against right_ids already above the watermark (id-column-only,
-    predicate-pushed scan of the index). Geometry guarded: a tail whose
-    vectors are not ``meta.dim``-dimensional raises instead of silently
-    hashing through mismatched planes. Pre-watermark artifacts derive
-    the watermark from the stored table once, then stamp it.
-    ``advance_to`` floors the flipped watermark, exactly as in
-    :func:`refresh_minhash_index` — for screen-and-drop callers whose
-    dropped ids are decided but never stored."""
+    (pytest-pinned). Single-table artifact, so one crash window, closed
+    by the shared replay guard on ``right_id``
+    (``util.refresh_above_watermark``, which also stamps pre-watermark
+    artifacts and applies the ``advance_to`` floor). Geometry guarded: a
+    tail whose vectors are not ``meta.dim``-dimensional raises instead of
+    silently hashing through mismatched planes."""
     import os as _os
 
-    spark = df.sparkSession
-    meta = read_signlsh_index_meta(path)
-    icol = meta["id_col"]
-    bands_dir = _os.path.join(path, "bands")
-    wm = meta.get("max_id")
-    if wm is None and "max_id" not in meta:
-        wm = spark.read.parquet(bands_dir).agg(F.max("right_id")).collect()[0][0]
-    tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
-    new_max = tail.agg(F.max(F.col(icol))).collect()[0][0]
-    if new_max is None:
-        # nothing above the watermark: stamp the advance_to floor AND any
-        # watermark just derived from a pre-watermark artifact — so the
-        # next no-op refresh doesn't re-pay the derivation scan
-        stamp = wm
-        if advance_to is not None and (stamp is None or advance_to > stamp):
-            stamp = advance_to
-        if meta.get("max_id") != _json_id(stamp) or "max_id" not in meta:
-            meta["max_id"] = _json_id(stamp)
-            _write_index_meta(path, "signlsh_index.json", meta)
-        return meta
-    tail_dim = _vec_dim(tail, meta["vec_col"])
-    if tail_dim != meta["dim"]:
-        raise ValueError(
-            f"refresh_signlsh_index: tail vectors are {tail_dim}-dim but "
-            f"the index at {path!r} was built over {meta['dim']}-dim "
-            "vectors — rebuilding is the only sound operation"
+    def append(tail: DataFrame, meta: dict) -> None:
+        # the dim check reads the tail BEFORE the replay guard: a replay
+        # whose rows all landed leaves the guarded tail empty
+        wm = meta["max_id"]
+        above = df if wm is None else df.filter(F.col(meta["id_col"]) > F.lit(wm))
+        tail_dim = _vec_dim(above, meta["vec_col"])
+        if tail_dim != meta["dim"]:
+            raise ValueError(
+                f"refresh_signlsh_index: tail vectors are {tail_dim}-dim but "
+                f"the index at {path!r} was built over {meta['dim']}-dim "
+                "vectors — rebuilding is the only sound operation"
+            )
+        all_planes = signlsh_planes(
+            meta["dim"], meta["bands"] * meta["bits_per_band"], meta["seed"]
         )
-    ghost = spark.read.parquet(bands_dir).select("right_id")
-    if wm is not None:
-        ghost = ghost.filter(F.col("right_id") > F.lit(wm))
-    tail = tail.join(
-        ghost.distinct().select(F.col("right_id").alias(icol)),
-        [icol],
-        "left_anti",
+        _signlsh_inverted(
+            tail, meta["id_col"], meta["vec_col"], meta["bands"],
+            meta["bits_per_band"], all_planes,
+        ).write.mode("append").parquet(_os.path.join(path, "bands"))
+
+    return refresh_above_watermark(
+        df, path, "signlsh_index.json", "bands", append,
+        advance_to=advance_to, stored_id="right_id",
     )
-    all_planes = signlsh_planes(
-        meta["dim"], meta["bands"] * meta["bits_per_band"], meta["seed"]
-    )
-    _signlsh_inverted(
-        tail, icol, meta["vec_col"], meta["bands"], meta["bits_per_band"],
-        all_planes,
-    ).write.mode("append").parquet(bands_dir)
-    if advance_to is not None and advance_to > new_max:
-        new_max = advance_to
-    meta["max_id"] = _json_id(new_max)
-    _write_index_meta(path, "signlsh_index.json", meta)
-    return meta
 
 
 def read_signlsh_index_meta(path: str) -> dict:
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "signlsh_index.json")) as f:
-        return _json.load(f)
+    return read_sidecar(path, "signlsh_index.json")
 
 
 def signlsh_index_stats(
@@ -4298,9 +4161,9 @@ def build_winnow_index(
         "text_col": text_col,
         "k": int(k),
         "window": int(window),
-        "max_id": _json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
+        "max_id": json_id(df.agg(F.max(F.col(id_col))).collect()[0][0]),
     }
-    _write_index_meta(path, "winnow_index.json", meta)
+    write_sidecar(path, "winnow_index.json", meta)
     return meta
 
 
@@ -4314,51 +4177,24 @@ def refresh_winnow_index(
     fingerprinted through the SIDECAR-frozen (k, window) (the same
     :func:`winnow_fingerprints` body the build uses) and appended —
     row-identical to a from-scratch build over the union. Single-table
-    artifact, one crash window: a replay anti-joins the tail against
-    ids already above the watermark (id-column-only, predicate-pushed
-    scan). Sub-``k``-char docs select nothing but still advance the
-    watermark (``max_id`` covers the full batch — the family-wide
-    discipline). ``advance_to`` floors the flip for screen-and-drop
-    callers."""
+    artifact, one crash window, closed by the shared replay guard
+    (``util.refresh_above_watermark``). Sub-``k``-char docs select
+    nothing but still advance the watermark. ``advance_to`` floors the
+    flip for screen-and-drop callers."""
     import os as _os
 
-    spark = df.sparkSession
-    meta = read_winnow_index_meta(path)
-    icol = meta["id_col"]
-    fps_dir = _os.path.join(path, "fps")
-    wm = meta.get("max_id")
-    tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
-    new_max = tail.agg(F.max(F.col(icol))).collect()[0][0]
-    if new_max is None:
-        stamp = wm
-        if advance_to is not None and (stamp is None or advance_to > stamp):
-            stamp = advance_to
-        if meta.get("max_id") != _json_id(stamp) or "max_id" not in meta:
-            meta["max_id"] = _json_id(stamp)
-            _write_index_meta(path, "winnow_index.json", meta)
-        return meta
-    ghost = spark.read.parquet(fps_dir).select("id")
-    if wm is not None:
-        ghost = ghost.filter(F.col("id") > F.lit(wm))
-    tail = tail.join(
-        ghost.distinct().select(F.col("id").alias(icol)), [icol], "left_anti"
+    def append(tail: DataFrame, meta: dict) -> None:
+        winnow_fingerprints(
+            tail, meta["id_col"], meta["text_col"], meta["k"], meta["window"]
+        ).write.mode("append").parquet(_os.path.join(path, "fps"))
+
+    return refresh_above_watermark(
+        df, path, "winnow_index.json", "fps", append, advance_to=advance_to
     )
-    winnow_fingerprints(
-        tail, icol, meta["text_col"], meta["k"], meta["window"]
-    ).write.mode("append").parquet(fps_dir)
-    if advance_to is not None and advance_to > new_max:
-        new_max = advance_to
-    meta["max_id"] = _json_id(new_max)
-    _write_index_meta(path, "winnow_index.json", meta)
-    return meta
 
 
 def read_winnow_index_meta(path: str) -> dict:
-    import json as _json
-    import os as _os
-
-    with open(_os.path.join(path, "winnow_index.json")) as f:
-        return _json.load(f)
+    return read_sidecar(path, "winnow_index.json")
 
 
 def winnow_index_stats(

@@ -28,7 +28,6 @@ clustering makes a file-pruned scan).
 
 from __future__ import annotations
 
-import json
 import os
 from collections.abc import Sequence
 
@@ -40,39 +39,14 @@ from kaer_spark.functions.vector import (
     double_nested_lit,
     l2sq,
 )
+from kaer_spark.operators.util import (
+    read_sidecar,
+    refresh_above_watermark,
+    write_sidecar,
+)
 
 META_FILE = "index.json"
 DATA_DIR = "data"
-
-
-def _write_meta_atomic(path: str, filename: str, meta: dict) -> None:
-    """Sidecar meta writes are tmp + ``os.replace`` (the
-    ``Collection._save_meta`` pattern): a crash mid-write can never leave
-    a truncated JSON, and the watermark flip is a single atomic op."""
-    os.makedirs(path, exist_ok=True)
-    target = os.path.join(path, filename)
-    tmp = target + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, target)
-
-
-def _refresh_replay_guard(tail: DataFrame, path: str, meta: dict) -> DataFrame:
-    """Make a replayed catch-up harmless: a crash AFTER a successful tail
-    append but BEFORE the meta watermark update leaves rows on disk with
-    ``id > meta.max_id``; re-encoding the same tail would duplicate ids in
-    the index table (and in served top-k). Anti-join the tail against the
-    ids already present above the watermark — an id-column-only,
-    predicate-pushed scan of the index table, not the corpus — so the
-    replay appends exactly the missing rows (usually none)."""
-    id_col = meta["id_col"]
-    spark = tail.sparkSession
-    existing = (
-        spark.read.parquet(os.path.join(path, DATA_DIR))
-        .select(id_col)
-        .filter(F.col(id_col) > meta["max_id"])
-    )
-    return tail.join(existing, [id_col], "left_anti")
 
 
 def _assign_cells(
@@ -149,31 +123,27 @@ def build_ivf_index(
         "max_id": int(max_id) if max_id is not None else -1,
         "centroids": centroids,
     }
-    _write_meta_atomic(path, META_FILE, meta)
+    write_sidecar(path, META_FILE, meta)
     return meta
 
 
 def read_index_meta(path: str) -> dict:
-    with open(os.path.join(path, META_FILE)) as f:
-        return json.load(f)
+    return read_sidecar(path, META_FILE)
 
 
 def refresh_ivf_index(corpus: DataFrame, path: str) -> dict:
     """Catch-up (reference O8, ``updateIndexFromLastId``): append vectors
-    with ``id > meta.max_id`` to their cells using the stored centroids."""
-    meta = read_index_meta(path)
-    tail = corpus.filter(F.col(meta["id_col"]) > meta["max_id"])
-    new_max = tail.agg(F.max(meta["id_col"])).collect()[0][0]
-    if new_max is None:
-        return meta  # nothing to replay
-    tail = _refresh_replay_guard(tail, path, meta)
-    assigned = _assign_cells(tail, meta["centroids"], meta["vec_col"])
-    assigned.write.mode("append").partitionBy("_cell").parquet(
-        os.path.join(path, DATA_DIR)
+    with ``id > meta.max_id`` to their cells using the stored centroids
+    (``util.refresh_above_watermark``: replay-guarded, atomic flip)."""
+
+    def append(tail: DataFrame, meta: dict) -> None:
+        _assign_cells(tail, meta["centroids"], meta["vec_col"]).write.mode(
+            "append"
+        ).partitionBy("_cell").parquet(os.path.join(path, DATA_DIR))
+
+    return refresh_above_watermark(
+        corpus, path, META_FILE, DATA_DIR, append, stored_id=None
     )
-    meta["max_id"] = int(new_max)
-    _write_meta_atomic(path, META_FILE, meta)
-    return meta
 
 
 def write_ivf_bucketed_table(
@@ -220,7 +190,7 @@ def write_ivf_bucketed_table(
         "table": table,
         "centroids": centroids,
     }
-    _write_meta_atomic(meta_path, META_FILE, meta)
+    write_sidecar(meta_path, META_FILE, meta)
     return meta
 
 
@@ -489,13 +459,12 @@ def build_pq_index(
     }
     if extra_meta:
         meta.update(extra_meta)
-    _write_meta_atomic(path, PQ_META_FILE, meta)
+    write_sidecar(path, PQ_META_FILE, meta)
     return meta
 
 
 def read_pq_meta(path: str) -> dict:
-    with open(os.path.join(path, PQ_META_FILE)) as f:
-        return json.load(f)
+    return read_sidecar(path, PQ_META_FILE)
 
 
 def refresh_pq_index(corpus: DataFrame, path: str) -> dict:
@@ -507,37 +476,32 @@ def refresh_pq_index(corpus: DataFrame, path: str) -> dict:
     argmin for ``deterministic``, numpy for ``kmeans``), so a refreshed
     index is row-identical to a from-scratch build over the union.
     Incremental, and idempotent against BOTH failure directions: the meta
-    watermark flips atomically (tmp + ``os.replace``), and a replayed
-    refresh after a crash-between-append-and-meta anti-joins away the ids
-    already on disk (``_refresh_replay_guard``) instead of re-appending
-    them."""
+    watermark flips atomically, and a replayed refresh after a
+    crash-between-append-and-meta anti-joins away the ids already on disk
+    instead of re-appending them (``util.refresh_above_watermark``)."""
     from kaer_spark.operators import similarity as S
 
-    meta = read_pq_meta(path)
-    tail = corpus.filter(F.col(meta["id_col"]) > meta["max_id"])
-    new_max = tail.agg(F.max(meta["id_col"])).collect()[0][0]
-    if new_max is None:
-        return meta  # nothing to replay
-    tail = _refresh_replay_guard(tail, path, meta)
-    if meta["fit"] == "deterministic":
-        encoded = S.pq_encode_deterministic(
-            tail, meta["codebooks"], meta["vec_col"]
-        )
-    else:
-        encoded = S.pq_encode(tail, meta["codebooks"], meta["vec_col"])
-    cols = [meta["id_col"], "pq_code"]
-    if meta["cells"] is not None:
-        encoded = S.ivf_assign_deterministic(
-            encoded, meta["centroids"], meta["vec_col"]
-        )
-        cols.append("_cell")
-    writer = encoded.select(*cols).write.mode("append")
-    if meta["cells"] is not None:
-        writer = writer.partitionBy("_cell")
-    writer.parquet(os.path.join(path, DATA_DIR))
-    meta["max_id"] = int(new_max)
-    _write_meta_atomic(path, PQ_META_FILE, meta)
-    return meta
+    def append(tail: DataFrame, meta: dict) -> None:
+        if meta["fit"] == "deterministic":
+            encoded = S.pq_encode_deterministic(
+                tail, meta["codebooks"], meta["vec_col"]
+            )
+        else:
+            encoded = S.pq_encode(tail, meta["codebooks"], meta["vec_col"])
+        cols = [meta["id_col"], "pq_code"]
+        if meta["cells"] is not None:
+            encoded = S.ivf_assign_deterministic(
+                encoded, meta["centroids"], meta["vec_col"]
+            )
+            cols.append("_cell")
+        writer = encoded.select(*cols).write.mode("append")
+        if meta["cells"] is not None:
+            writer = writer.partitionBy("_cell")
+        writer.parquet(os.path.join(path, DATA_DIR))
+
+    return refresh_above_watermark(
+        corpus, path, PQ_META_FILE, DATA_DIR, append, stored_id=None
+    )
 
 
 def pq_index_topk(

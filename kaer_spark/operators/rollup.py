@@ -28,8 +28,6 @@ DECIMAL accumulation for cross-engine determinism.
 
 from __future__ import annotations
 
-import json
-import os
 from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -37,6 +35,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from kaer_spark.functions.time import NS_PER_DAY, NS_PER_SECOND, normalize_epoch_ns
+from kaer_spark.operators.util import read_sidecar, write_sidecar
 
 SPEC_FILE = "_rollup_spec.json"
 
@@ -117,10 +116,7 @@ def materialize_rollup(
         "lateness_ns": int(lateness_ns),
         "high_water_ns": int(high_water),
     }
-    tmp = os.path.join(path, SPEC_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(spec, f, indent=2)
-    os.replace(tmp, os.path.join(path, SPEC_FILE))
+    write_sidecar(path, SPEC_FILE, spec)
     return spec
 
 
@@ -132,8 +128,7 @@ def refresh_rollup(df: DataFrame, path: str) -> dict:
     overwrite so touched days are replaced atomically per-directory and
     untouched history is never rewritten — idempotent under retry.
     """
-    with open(os.path.join(path, SPEC_FILE)) as f:
-        spec = json.load(f)
+    spec = read_sidecar(path, SPEC_FILE)
     ts_col = spec["ts_col"]
     df = normalize_epoch_ns(df, ts_col)
     refresh_from = max(0, spec["high_water_ns"] - spec["lateness_ns"])
@@ -150,10 +145,7 @@ def refresh_rollup(df: DataFrame, path: str) -> dict:
         spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
     high_water = df.agg(F.max(F.col(ts_col).cast("long"))).collect()[0][0] or 0
     spec["high_water_ns"] = int(max(high_water, spec["high_water_ns"]))
-    tmp = os.path.join(path, SPEC_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(spec, f, indent=2)
-    os.replace(tmp, os.path.join(path, SPEC_FILE))
+    write_sidecar(path, SPEC_FILE, spec)
     return spec
 
 

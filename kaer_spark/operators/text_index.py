@@ -38,7 +38,6 @@ index is derived data; rebuild is one pass).
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 
@@ -50,7 +49,11 @@ from kaer_spark.functions.text import tokens
 from kaer_spark.operators.util import (
     ensure_parallelism,
     global_ranked,
+    json_id,
+    read_sidecar,
+    stored_ids_above,
     watermark_health_cols,
+    write_sidecar,
 )
 
 META_FILE = "index.json"
@@ -167,39 +170,14 @@ def build_text_index(
         "sum_dl": int(stats["sumdl"] or 0),
         # any orderable, JSON-serializable id type works (ints stay ints;
         # string ids round-trip as-is for the refresh high-water filter)
-        "max_id": _json_id(stats["maxid"]),
+        "max_id": json_id(stats["maxid"]),
         "n_buckets": int(n_buckets),
         "id_col": id_col,
         "text_col": text_col,
         "positional": True,
     }
-    _write_meta(path, meta)
+    write_sidecar(path, META_FILE, meta)
     return meta
-
-
-def _json_id(v):
-    """High-water id as stored in the sidecar: int and string id columns
-    ONLY (both JSON-round-trip losslessly AND order-consistently, which
-    the ``id > watermark`` refresh filter depends on) — anything else
-    fails loud HERE, at build/refresh time, instead of as json.dump's
-    TypeError at the sidecar write after the data tables landed (the
-    same rule as dedup's refreshable indexes)."""
-    if v is None:
-        return None
-    if isinstance(v, bool) or not isinstance(v, (int, str)):
-        raise TypeError(
-            "refreshable index id columns must be int or string "
-            f"(watermark comparisons ride the JSON round-trip); got "
-            f"{type(v).__name__}: {v!r}"
-        )
-    return int(v) if isinstance(v, int) else v
-
-
-def _write_meta(path: str, meta: dict) -> None:
-    tmp = os.path.join(path, META_FILE + ".tmp")
-    with open(tmp, "w") as f:
-        json.dump(meta, f)
-    os.replace(tmp, os.path.join(path, META_FILE))
 
 
 def refresh_text_index(df: DataFrame, path: str) -> dict:
@@ -273,8 +251,8 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
     if not stats["n"]:  # pure replay: everything already on disk — heal meta
         meta["n_docs"] += acc_n
         meta["sum_dl"] += acc_sumdl
-        meta["max_id"] = _json_id(acc_maxid)
-        _write_meta(path, meta)
+        meta["max_id"] = json_id(acc_maxid)
+        write_sidecar(path, META_FILE, meta)
         return meta
     aggs = [F.count("*").cast("long").alias("tf")]
     if meta.get("positional"):
@@ -295,14 +273,12 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
     postings_dir = os.path.join(path, POSTINGS_DIR)
     if os.path.isdir(postings_dir):
         try:
-            ghost = df.sparkSession.read.parquet(postings_dir).select("id")
+            ghost = stored_ids_above(df.sparkSession, postings_dir, meta["max_id"])
         except AnalysisException:
             # a build over zero rows writes a partitioned dir with no part
             # files (partitions are data-driven) — nothing to guard against
             ghost = None
         if ghost is not None:
-            if meta["max_id"] is not None:
-                ghost = ghost.filter(F.col("id") > meta["max_id"])
             toks_postings = toks.join(ghost.distinct(), "id", "left_anti")
     # an index built before the positional layout keeps appending the
     # (term, id, tf) shape it was built with — mixed parquet schemas in
@@ -327,8 +303,8 @@ def refresh_text_index(df: DataFrame, path: str) -> dict:
     new_max = stats["maxid"]
     if acc_maxid is not None and (new_max is None or acc_maxid > new_max):
         new_max = acc_maxid
-    meta["max_id"] = _json_id(new_max)
-    _write_meta(path, meta)
+    meta["max_id"] = json_id(new_max)
+    write_sidecar(path, META_FILE, meta)
     return meta
 
 
@@ -445,8 +421,7 @@ def text_index_stats(
 
 
 def read_text_index_meta(path: str) -> dict:
-    with open(os.path.join(path, META_FILE)) as f:
-        return json.load(f)
+    return read_sidecar(path, META_FILE)
 
 
 def search_text_index(

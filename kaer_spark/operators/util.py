@@ -1,8 +1,16 @@
-"""Shared operator utilities."""
+"""Shared operator utilities, including the at-rest index skeleton every
+refreshable index family shares: the atomic sidecar writer/reader, the
+JSON watermark id rule, the replay-guard read and the watermark
+catch-up (reference O8, ``updateIndexFromLastId``, ``db/db.go:191-207``)."""
 
 from __future__ import annotations
 
+import json
+import os
+from typing import Callable
+
 from pyspark.sql import DataFrame
+from pyspark.sql import functions as F
 
 
 def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> DataFrame:
@@ -20,10 +28,121 @@ def ensure_parallelism(df: DataFrame, min_partitions: int | None = None) -> Data
     return df.repartition(target)
 
 
+def write_sidecar(path: str, filename: str, meta: dict) -> None:
+    """Write ``meta`` as JSON to ``<path>/<filename>`` atomically: tmp
+    file + ``os.replace``, so a crash mid-write never leaves truncated
+    JSON and a watermark flip is one atomic op. The engine's one sidecar
+    writer (index sidecars, collection catalogs, rollup specs, the data
+    swap manifest)."""
+    os.makedirs(path, exist_ok=True)
+    target = os.path.join(path, filename)
+    with open(target + ".tmp", "w") as f:
+        json.dump(meta, f)
+    os.replace(target + ".tmp", target)
+
+
+def read_sidecar(path: str, filename: str) -> dict:
+    with open(os.path.join(path, filename)) as f:
+        return json.load(f)
+
+
+def json_id(v):
+    """High-water id as stored in a sidecar: refreshable indexes support
+    int and string id columns ONLY — both JSON-round-trip losslessly AND
+    order-consistently, which the ``id > watermark`` refresh filters
+    depend on. Anything else (dates, decimals, binary) fails LOUD at
+    build/refresh time instead of raising from ``json.dump`` at the
+    sidecar write (after the data tables already landed) or, worse,
+    silently re-indexing rows when the JSON form orders differently than
+    the column."""
+    if v is None:
+        return None
+    if isinstance(v, bool) or not isinstance(v, (int, str)):
+        raise TypeError(
+            "refreshable index id columns must be int or string "
+            f"(watermark comparisons ride the JSON round-trip); got "
+            f"{type(v).__name__}: {v!r}"
+        )
+    return int(v) if isinstance(v, int) else v
+
+
+def watermark_floor(wm, advance_to):
+    """``wm`` raised to ``advance_to`` (either may be None)."""
+    if advance_to is not None and (wm is None or advance_to > wm):
+        return advance_to
+    return wm
+
+
+def stored_ids_above(spark, table_dir: str, wm, id_col: str = "id") -> DataFrame:
+    """The replay-guard read: the ids an index table already holds above
+    the watermark ``wm`` (every id when ``wm`` is None) — rows a crashed
+    refresh appended before its sidecar flip. An id-column-only scan
+    whose ``id > wm`` filter prunes row groups, so the no-crash case
+    reads next to nothing."""
+    ids = spark.read.parquet(table_dir).select(id_col)
+    return ids if wm is None else ids.filter(F.col(id_col) > F.lit(wm))
+
+
+def refresh_above_watermark(
+    df: DataFrame,
+    path: str,
+    sidecar: str,
+    table: str,
+    append: Callable[[DataFrame, dict], None],
+    advance_to=None,
+    stored_id: str | None = "id",
+) -> dict:
+    """The watermark catch-up of a refreshable at-rest index: hand the
+    rows of ``df`` with ``id > max_id`` to ``append(tail, meta)``, then
+    flip ``max_id`` in the ``<path>/<sidecar>`` sidecar.
+
+    * **tail** — ``df`` filtered on the sidecar's ``id_col`` above the
+      watermark (all of ``df`` when ``max_id`` is None). A sidecar from
+      before ``max_id`` was stamped derives it once from ``table``.
+    * **replay guard** — ids already stored in ``<path>/<table>`` (column
+      ``stored_id``) above the watermark are anti-joined out of the tail:
+      a crash after the append but before the flip leaves them on disk,
+      and a replay must not append them twice. ``table`` is the family's
+      LAST-written table, so its ids mean "fully indexed"; ``stored_id``
+      None means the table keeps the corpus id column name.
+    * **stamp / flip** — the new ``max_id`` is the tail's max id (the full
+      tail: rows a family derives nothing from still advance it), floored
+      by ``advance_to`` for screen-and-drop callers whose dropped ids are
+      decided but never stored. A no-op refresh writes the sidecar only
+      when that changes the stamp.
+
+    ``append`` reads the watermark the tail was cut at from
+    ``meta["max_id"]``. Returns the flipped meta."""
+    spark = df.sparkSession
+    meta = read_sidecar(path, sidecar)
+    icol = meta["id_col"]
+    stored_id = stored_id or icol
+    table_dir = os.path.join(path, table)
+    stamped = "max_id" in meta
+    if not stamped:
+        meta["max_id"] = (
+            spark.read.parquet(table_dir).agg(F.max(stored_id)).collect()[0][0]
+        )
+    wm = meta["max_id"]
+    tail = df if wm is None else df.filter(F.col(icol) > F.lit(wm))
+    new_max = json_id(tail.agg(F.max(F.col(icol))).collect()[0][0])
+    if new_max is not None:
+        done = stored_ids_above(spark, table_dir, wm, stored_id)
+        append(
+            tail.join(done.select(F.col(stored_id).alias(icol)), [icol], "left_anti"),
+            meta,
+        )
+    stamp = json_id(watermark_floor(wm if new_max is None else new_max, advance_to))
+    if not stamped or stamp != wm:
+        meta["max_id"] = stamp
+        write_sidecar(path, sidecar, meta)
+    return meta
+
+
 def watermark_health_cols(out: DataFrame, wm, corpus, corpus_id_col: str):
     """Staleness columns for an index-stats report, typed by the id
     column's own domain (refreshable indexes bless int AND string ids —
-    ``dedup._json_id`` — so a stats surface that ``int()``-coerces the
+    :func:`json_id` — so a stats surface that ``int()``-coerces the
     watermark raises on every string-keyed index, and ``CAST(<string> AS
     long)`` silently nulls the watermark column).
 

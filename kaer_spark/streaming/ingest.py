@@ -104,7 +104,6 @@ def stream_insert(
     checkpoint_dir: str,
     text_col: str = "_m_doc",
     trigger: dict[str, Any] | None = None,
-    refresh_index: bool = False,
     text_index_path: str | None = None,
     pq_index_path: str | None = None,
 ) -> StreamingQuery:
@@ -112,14 +111,12 @@ def stream_insert(
 
     Each micro-batch runs the normal insert path (dense ids continue from
     the collection's catalog cursor; single-writer semantics, matching the
-    reference's process-local id counter, ``db/db.go:75``).
-
-    ``refresh_index=True`` additionally runs the IVF catch-up after each
-    batch (``index_store.refresh_ivf_index`` — the reference adds every
-    inserted vector to its HNSW inline, ``db/db.go:95-99``; here the
-    equivalent is the idempotent ``id > max_id`` tail append to the cell
-    partitions, a file-pruned scan thanks to id-block clustering). A
-    no-op when the collection has no index yet.
+    reference's process-local id counter, ``db/db.go:75``), which also
+    catches up every index the collection owns — the IVF index included
+    (the reference adds every inserted vector to its HNSW inline,
+    ``db/db.go:95-99``; here the equivalent is the idempotent
+    ``id > max_id`` tail append to the cell partitions, a file-pruned scan
+    thanks to id-block clustering).
 
     ``text_index_path`` (optional) keeps a materialized inverted text
     index (``operators.text_index``) current the same way: the per-batch
@@ -142,10 +139,6 @@ def stream_insert(
         if batch_df.isEmpty():
             return
         collection.insert_df(batch_df, text_col=text_col)
-        if refresh_index and collection.meta.get("has_index"):
-            from kaer_spark.operators.index_store import refresh_ivf_index
-
-            refresh_ivf_index(collection.df(), collection.index_path)
         if text_index_path is not None:
             from kaer_spark.operators.text_index import refresh_text_index
 

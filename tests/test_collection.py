@@ -229,12 +229,17 @@ def test_delete_rebuilds_index(spark, tmp_path):
     ctx = KaerContext(spark, str(tmp_path / "kaer"))
     coll = ctx.create_collection("di")
     coll.insert([f"doc number {i}" for i in range(30)], [{"k": i} for i in range(30)])
-    coll.build_index(cells=4)
+    coll.build_index(cells=4, seed=7)
     coll.delete({"k": {"$gte": 20}})
     # approximate search must not surface deleted ids
     hits = coll.query("doc number 5", k=30, approximate=True, nprobe=4).collect()
     ids = {r["_m_id"] for r in hits}
     assert ids and all(i < 20 for i in ids)
+    # the rebuild keeps the geometry the index was built with, seed included
+    from kaer_spark.operators.index_store import read_index_meta
+
+    im = read_index_meta(coll.index_path)
+    assert (im["seed"], im["cells"], im["fit"]) == (7, 4, "kmeans")
 
 
 def test_delete_schemaless_filter(spark, tmp_path):
@@ -436,14 +441,22 @@ def test_collection_stats(spark, tmp_path):
     ctx = KaerContext(spark, str(tmp_path / "kaer"))
     ctx.create_collection("st")
     col = ctx.get_collection("st")
+    flags = [
+        "has_index", "has_text_index", "has_pq_index", "has_minhash_index",
+        "has_signlsh_index", "has_shingle_index", "has_fuzzy_index",
+        "has_winnow_index",
+    ]
     s0 = col.stats()
-    assert s0["n_docs"] == 0 and not s0["has_index"] and s0["next_id"] == 0
+    assert s0["n_docs"] == 0 and s0["next_id"] == 0
+    assert all(s0[f] is False for f in flags)
     col.insert([f"doc {i}" for i in range(6)])
     col.build_index(cells=2, fit="spread")
+    col.build_winnow_index()
     s = col.stats()
     assert s["name"] == "st" and s["n_docs"] == 6 and s["next_id"] == 6
     assert s["embedding_dim"] == 64
     assert s["has_index"] and s["index"] == {"cells": 2, "fit": "spread", "max_id": 5}
+    assert {f for f in flags if s[f]} == {"has_index", "has_winnow_index"}
 
 
 def test_deduplicate_against_both_methods(spark, tmp_path):

@@ -2225,7 +2225,7 @@ def test_shingle_index_stats_report(spark, tmp_path):
 
 
 def test_shingle_index_stats_string_ids(spark):
-    """ADVICE r16: stats over a STRING-keyed index (blessed by _json_id)
+    """ADVICE r16: stats over a STRING-keyed index (blessed by util.json_id)
     must not int()-coerce the watermark — it reports the watermark in
     the id column's own type and staleness as an ordering boolean
     instead of a numeric lag."""
@@ -2662,6 +2662,18 @@ def test_winnow_index_family_contract(spark, tmp_path):
     # replayed refresh: no duplicate rows, watermark stable
     refresh_winnow_index(docs, path)
     assert rows(path) == rows(full)
+    # crash between the fps append and the watermark flip: wind the
+    # watermark back and replay — the guard must not double fps rows
+    import json as _json
+    import os as _os
+
+    meta = read_winnow_index_meta(path)
+    meta["max_id"] = 3
+    with open(_os.path.join(path, "winnow_index.json"), "w") as f:
+        _json.dump(meta, f)
+    refresh_winnow_index(docs, path)
+    assert rows(path) == rows(full)
+    assert read_winnow_index_meta(path)["max_id"] == 9
     # blank tail still advances the watermark
     blank = docs.union(
         spark.createDataFrame([(50, "x")], "doc_id long, text string")

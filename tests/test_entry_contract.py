@@ -5,9 +5,10 @@ silently downgrade to a rows-only check in the driver)."""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 # exactly the five genuinely MLlib-bound entries (r14: the GK-sketch
 # corpus_profile_approx registry row was retired — quantiles_sampled is

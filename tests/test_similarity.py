@@ -69,9 +69,14 @@ def test_ivf_recall_sweep_monotone(spark, embeddings, sf_dir):
     in nprobe and exactly 1.0 when every cell is probed (nprobe = cells ⇒
     the IVF result IS the exact result)."""
     import importlib.util
+    import os
 
     spec = importlib.util.spec_from_file_location(
-        "entry_mod", "/root/repo/__spark_entry__.py"
+        "entry_mod",
+        os.path.join(
+            os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+            "__spark_entry__.py",
+        ),
     )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)

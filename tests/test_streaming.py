@@ -168,7 +168,7 @@ def test_stream_insert_dense_ids(spark, tmp_path):
 
 
 def test_stream_insert_keeps_index_current(spark, tmp_path):
-    """refresh_index=True: the materialized IVF index catches up after each
+    """The materialized IVF index catches up after each
     micro-batch (the streaming form of the reference's inline
     HNSW-add-on-insert) — index row count and max_id track the collection."""
     from kaer_spark.operators.index_store import read_index_meta
@@ -189,7 +189,7 @@ def test_stream_insert_keeps_index_current(spark, tmp_path):
         .option("maxFilesPerTrigger", 1)
         .parquet(f"{src}/*")
     )
-    q = stream_insert(coll, stream, str(tmp_path / "ckpt_idx"), refresh_index=True)
+    q = stream_insert(coll, stream, str(tmp_path / "ckpt_idx"))
     q.processAllAvailable()
     q.stop()
 
@@ -666,7 +666,7 @@ def test_stream_insert_keeps_pq_index_current(spark, tmp_path):
     )
     q = stream_insert(
         coll, stream, str(tmp_path / "ckpt_pq"),
-        refresh_index=True, text_index_path=tix,
+        text_index_path=tix,
         pq_index_path=coll.pq_index_path,
     )
     q.processAllAvailable()
